@@ -1,9 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 import graft.core.ChurnSchema
 
 /** Structured Streaming extension (SURVEY §2.11 / §7 step 9): the
@@ -14,6 +16,12 @@ import graft.core.ChurnSchema
   *    transform stages via foreachBatch (one code path for batch+stream);
   *  - watermarked sliding-window event aggregation;
   *  - stateful per-user session tracking with flatMapGroupsWithState.
+  *
+  * Every `*Stream` maintenance loop runs on one micro-batch driver
+  * ([[microBatch]]); the seven loops that probe a persisted index run on
+  * one maintenance skeleton over it ([[indexStream]]), so their
+  * crash-recovery, committed-data, compaction, own-batch and
+  * re-delivery gates are the same code.
   */
 object Streaming {
 
@@ -26,20 +34,16 @@ object Streaming {
       spark: SparkSession, rawDir: String, silverDir: String, checkpoint: String,
       transform: DataFrame => DataFrame,
       schema: StructType = ChurnSchema.schema): StreamingQuery = {
-    spark.readStream
+    val csv = spark.readStream
       .schema(schema)
       .option("header", "true")
       .option("maxFilesPerTrigger", 16)
       .csv(rawDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        transform(batch)
-          .withColumn("_batch_id", lit(batchId))
-          .write.mode("append").option("compression", "snappy").parquet(silverDir)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    microBatch(csv, checkpoint) { (batch, batchId, _) =>
+      transform(batch)
+        .withColumn("_batch_id", lit(batchId))
+        .write.mode("append").option("compression", "snappy").parquet(silverDir)
+    }
   }
 
   /** Watermarked tumbling-window aggregation over an events stream
@@ -121,6 +125,215 @@ object Streaming {
     d.take(4).map(b => f"${b & 0xff}%02x").mkString
   }
 
+  // ---- the micro-batch driver and the index-maintenance skeleton --------
+
+  /** The one micro-batch driver under every `*Stream` loop: an
+    * AvailableNow `foreachBatch` query checkpointed at `checkpoint`.
+    * `body` gets the batch, its raw `batchId` and the
+    * incarnation-qualified key `<runKey>-<batchId>` every per-batch
+    * output is partitioned by, so a retried micro-batch overwrites its
+    * previous attempt (effectively-once without a transactional sink).
+    * With `stage = Some((live, suffix))` each batch first runs
+    * [[recoverStage]] on the dir the loop rewrites by staged swap.
+    */
+  private def microBatch(input: DataFrame, checkpoint: String,
+      stage: Option[(String, String)] = None)(
+      body: (DataFrame, Long, String) => Unit): StreamingQuery = {
+    val key = runKey(checkpoint)
+    input.writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        stage.foreach { case (live, suffix) =>
+          recoverStage(batch.sparkSession, live, suffix)
+        }
+        body(batch, batchId, s"$key-$batchId")
+      }
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .start()
+  }
+
+  /** Batch-start stage recovery shared by the maintenance loops: if the
+    * last incarnation crashed INSIDE a compaction's swap (live dir
+    * deleted, fully-written stage not yet renamed), the stage holds the
+    * only copy of the index — promote it BEFORE any `fs.exists(live)`
+    * guard runs, or the loop mistakes the orphaned index for a
+    * first-ever ingest and silently rebuilds from one batch.
+    */
+  private def recoverStage(sp: SparkSession, dir: String,
+      stageSuffix: String): Unit = {
+    val live = new Path(dir)
+    val fs = live.getFileSystem(sp.sparkContext.hadoopConfiguration)
+    graft.ops.StagedSwap.recoverCrashedSwap(fs, live, new Path(dir + stageSuffix))
+    ()
+  }
+
+  /** Mid-stream compaction cadence: every `every`-th batch after the
+    * first (0 disables it). */
+  private def compactionDue(every: Int, batchId: Long): Boolean =
+    every > 0 && batchId > 0 && batchId % every == 0
+
+  /** What an index loop does with a batch id an earlier batch already
+    * indexed. */
+  private sealed trait Redelivery
+
+  /** Fail the batch loudly, before its append, when one of its
+    * `batchIdCol` values is already in the prior index's `indexIdCol`.
+    * Re-delivered ids are the duplicate class the `batch=<key>` layout
+    * does NOT structurally prevent (a re-crawled doc in a later file).
+    * An index that holds no ids names the `idsDir` sidecar each batch
+    * writes its ids to; that sidecar passes the same committed-data gate
+    * as the index, with the index's siblings.
+    */
+  private final case class RejectRedelivered(batchIdCol: String,
+      indexIdCol: String = "id", idsDir: Option[String] = None)
+      extends Redelivery
+
+  /** No re-delivery gate; `why` is the loop's reason. */
+  private final case class AdmitRedelivered(why: String) extends Redelivery
+
+  /** A persisted index that one maintenance loop probes and appends to,
+    * batch by batch — what [[indexStream]] needs to run the shared gates:
+    *  - `live`: the index dir a staged swap replaces, and `stageSuffix`
+    *    its stage sibling (`_compacting` or `_merging`);
+    *  - `siblings`: the dirs the loop commits BEFORE its index append
+    *    (pairs, spans, ledger deltas, postings, clean rows) — the
+    *    data-loss check of [[committedPrior]];
+    *  - `partCol`: the incarnation-keyed partition column (`batch` or
+    *    `seg`);
+    *  - `flatIndex`: the rejection for a dir without `partCol`
+    *    partitions;
+    *  - `redelivery`: the re-delivery gate, or the reason there is none;
+    *  - `compactEvery` / `compactExcept`: batch-start compaction that
+    *    keeps the named (own) partitions out of the fold (none by
+    *    default);
+    *  - `subdir`: the component the gate reads when the index spans
+    *    several dirs (the search index's `/norms`).
+    */
+  private final case class IndexKind(live: String, stageSuffix: String,
+      siblings: Seq[String], partCol: String, flatIndex: String,
+      redelivery: Redelivery, compactEvery: Int = 0,
+      compactExcept: (SparkSession, Set[String]) => Unit = (_, _) => (),
+      subdir: String = "") {
+    def dir: String = live + subdir
+  }
+
+  /** The committed-data gate every index loop uses instead of a bare
+    * `fs.exists`: the prior index at `dir`, read ONCE, flat layouts
+    * rejected, and this batch's own `partCol=<own>` partition excluded —
+    * or None when `dir` holds no committed parquet. A FIRST batch killed
+    * mid-append leaves the directory existing with only `_temporary`
+    * inside (no committed part files), and a bare gate then routes every
+    * retry into a read that crash-loops schema inference forever.
+    *
+    * When the dir is unreadable but any of the kind's `siblings` already
+    * holds entries, the index did not fail to bootstrap — it LOST data
+    * (manual cleanup, botched repair) while its downstream state
+    * survived; silently answering "empty" there would rebuild from
+    * nothing and corrupt every later fold (double-counted ledger
+    * deltas, re-admitted duplicates), so that case fails loudly.
+    *
+    * Sibling entries named `<col>=<own>` are IGNORED when classifying a
+    * sibling as populated: every loop commits sibling output BEFORE the
+    * index append, so the routine batch-0 crash — killed between the
+    * sibling commit and the index append — leaves exactly one sibling
+    * partition, this batch's own, next to an uncommitted index. That is
+    * the bootstrap-retry state, not data loss: the retry overwrites that
+    * very partition anyway. Only sibling entries from OTHER batches
+    * prove the index once held data.
+    *
+    * The own-batch exclusion keeps a retry that crashed between its
+    * append and the streaming commit from seeing its own rows as prior
+    * data. The key is incarnation-qualified, so a PREVIOUS incarnation's
+    * same-numbered batch is NOT excluded.
+    */
+  private def committedPrior(sp: SparkSession, dir: String, ix: IndexKind,
+      own: String): Option[DataFrame] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(sp.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else try {
+      val idx = sp.read.parquet(dir)
+      // a flat dir would survive exactly one append before partition
+      // discovery hits conflicting directory depths — reject it up front
+      require(idx.columns.contains(ix.partCol), ix.flatIndex)
+      // cast FIRST: a numeric-keyed legacy layout infers the key as int,
+      // and int =!= string coerces the literal to null — which would
+      // silently filter out the ENTIRE prior index
+      Some(idx.filter(col(ix.partCol).cast("string") =!= lit(own)))
+    } catch {
+      case e: AnalysisException
+          if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") ||
+            e.getMessage.contains("Unable to infer schema") =>
+        val populated = ix.siblings.filter { s =>
+          val q = new Path(s)
+          fs.exists(q) && fs.listStatus(q).exists { st =>
+            !st.getPath.getName.endsWith(s"=$own")
+          }
+        }
+        require(populated.isEmpty,
+          s"$dir holds no committed parquet but sibling state " +
+            s"${populated.mkString(", ")} is non-empty: the index lost " +
+            "data; repair it instead of rebuilding from empty")
+        None
+    }
+  }
+
+  /** The maintenance skeleton of the seven loops that probe a persisted
+    * index, on [[microBatch]]. Per batch, in this order:
+    *  1. [[recoverStage]] promotes a crashed compaction's stage;
+    *  2. [[committedPrior]] reads the prior index (None on first ingest);
+    *  3. on a [[compactionDue]] batch with a committed index, the index is
+    *     compacted EXCEPT this batch's own partition, then read again
+    *     (the first read listed files the compaction replaced). It runs
+    *     at batch START because the only possibly-uncommitted state then
+    *     is a crashed prior attempt of this very batch, and folding it
+    *     into base would break the retry's own-batch exclusion and
+    *     re-delivery gate;
+    *  4. `rowsOf` derives the rows the loop reads more than once — the
+    *     loop's own persist choice — unpersisted after the body;
+    *  5. the re-delivery gate, when the kind has one, fails the batch on
+    *     an id already in the prior index (retries of THIS batch are
+    *     excluded, so they don't false-positive): one column-pruned scan
+    *     + semi-join, with no broadcast hint — an AvailableNow backlog
+    *     batch can be millions of rows, so AQE picks the join strategy;
+    *  6. `body(rows, prior, own)` probes and writes, siblings first.
+    */
+  private def indexStream(input: DataFrame, checkpoint: String,
+      ix: IndexKind, rowsOf: DataFrame => DataFrame = identity)(
+      body: (DataFrame, Option[DataFrame], String) => Unit): StreamingQuery =
+    microBatch(input, checkpoint, Some((ix.live, ix.stageSuffix))) {
+        (batch, batchId, own) =>
+      val sp = batch.sparkSession
+      val prior = committedPrior(sp, ix.dir, ix, own) match {
+        case Some(_) if compactionDue(ix.compactEvery, batchId) =>
+          ix.compactExcept(sp, Set(own))
+          committedPrior(sp, ix.dir, ix, own)
+        case p => p
+      }
+      val rows = rowsOf(batch)
+      try {
+        ix.redelivery match {
+          case RejectRedelivered(batchIdCol, indexIdCol, idsDir) =>
+            val ids = idsDir.fold(prior)(d =>
+              prior.flatMap(_ => committedPrior(sp, d, ix, own)))
+            ids.foreach { idx =>
+              val redelivered = idx.select(col(indexIdCol).as("id")).join(
+                rows.select(col(batchIdCol).as("id")).distinct(), "id").take(1)
+              require(redelivered.isEmpty,
+                s"id ${redelivered.headOption.map(_.get(0)).orNull} was " +
+                  "already ingested by an earlier batch and is already " +
+                  s"indexed in ${idsDir.getOrElse(ix.dir)}; dedup upstream " +
+                  "(dedupDocStream) or repair the index before appending")
+            }
+          case AdmitRedelivered(_) =>
+        }
+        body(rows, prior, own)
+      } finally {
+        if (rows.storageLevel != StorageLevel.NONE) rows.unpersist(false)
+        ()
+      }
+    }
+
   /** Streaming incremental NEAR-dup detection — the production ingest
     * loop the persisted MinHash index exists for. Every micro-batch:
     *  (a) probes the signatures of the corpus ingested SO FAR for LSH
@@ -139,151 +352,31 @@ object Streaming {
     * corpus, which is what makes it equivalent to running the batch
     * probe per ingest.
     */
-  /** Batch-start stage recovery shared by the maintenance loops: if the
-    * last incarnation crashed INSIDE a compaction's swap (live dir
-    * deleted, fully-written stage not yet renamed), the stage holds the
-    * only copy of the index — promote it BEFORE any `fs.exists(live)`
-    * guard runs, or the loop mistakes the orphaned index for a
-    * first-ever ingest and silently rebuilds from one batch.
-    */
-  private def recoverStage(sp: org.apache.spark.sql.SparkSession,
-      dir: String, stageSuffix: String): Unit = {
-    val live = new org.apache.hadoop.fs.Path(dir)
-    val stage = new org.apache.hadoop.fs.Path(dir + stageSuffix)
-    val fs = live.getFileSystem(sp.sparkContext.hadoopConfiguration)
-    graft.ops.StagedSwap.recoverCrashedSwap(fs, live, stage)
-    ()
-  }
-
-  /** TRUE iff `dir` holds committed, schema-readable parquet — the gate
-    * every maintenance loop must use instead of a bare `fs.exists`: a
-    * FIRST batch killed mid-append leaves the directory existing with
-    * only `_temporary` inside (no committed part files), and the bare
-    * gate then routes every retry into a read that crash-loops schema
-    * inference forever (the round-14 review finding, present verbatim
-    * in all six loops before this helper).
-    *
-    * When the dir is unreadable but any `relatedState` dir already
-    * holds entries, the index did not fail to bootstrap — it LOST data
-    * (manual cleanup, botched repair) while its downstream state
-    * survived; silently answering "empty" there would rebuild from
-    * nothing and corrupt every later fold (double-counted ledger
-    * deltas, re-admitted duplicates), so that case fails loudly.
-    *
-    * `ownBatch` is this attempt's incarnation-qualified batch key:
-    * sibling partitions named `batch=<ownBatch>` / `seg=<ownBatch>` are
-    * IGNORED when classifying relatedState as populated. The write
-    * order in every loop commits sibling output (pairs, ledger deltas,
-    * postings) BEFORE the index append, so the routine batch-0 crash —
-    * killed between the sibling commit and the index append — leaves
-    * exactly one sibling partition, this batch's own, next to an
-    * uncommitted index. That is the bootstrap-retry state, not data
-    * loss: the retry overwrites that very partition anyway. Only
-    * sibling entries from OTHER batches prove the index once held data.
-    */
-  private def hasCommittedParquet(sp: org.apache.spark.sql.SparkSession,
-      dir: String, relatedState: Seq[String], ownBatch: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(sp.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) false
-    else try { sp.read.parquet(dir).schema; true } catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") ||
-            e.getMessage.contains("Unable to infer schema") =>
-        val populated = relatedState.filter { s =>
-          val q = new org.apache.hadoop.fs.Path(s)
-          fs.exists(q) && fs.listStatus(q).exists { st =>
-            !st.getPath.getName.endsWith(s"=$ownBatch")
-          }
-        }
-        require(populated.isEmpty,
-          s"$dir holds no committed parquet but sibling state " +
-            s"${populated.mkString(", ")} is non-empty: the index lost " +
-            "data; repair it instead of rebuilding from empty")
-        false
-    }
-  }
-
   def incrementalDedupStream(docs: DataFrame, indexDir: String,
       pairsDir: String, checkpoint: String,
       textCol: String = "text", idCol: String = "doc_id",
       shingleLen: Int = 1, numHashes: Int = 128, bands: Int = 32,
       maxBucket: Int = 1000, compactEvery: Int = 0): StreamingQuery = {
-    val key = runKey(checkpoint)
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        recoverStage(sp, indexDir, "_compacting")
-        val idxPath = new org.apache.hadoop.fs.Path(indexDir)
-        val fs = idxPath.getFileSystem(sp.sparkContext.hadoopConfiguration)
-        // committed-data gate, not bare fs.exists — see hasCommittedParquet
-        val idxCommitted = hasCommittedParquet(sp, indexDir, Seq(pairsDir), s"$key-$batchId")
-        // auto-compaction keeps the batch-partition count bounded under
-        // continuous ingest. It runs at batch START, excluding this
-        // batch's OWN partition: the only possibly-uncommitted state at
-        // that point is a crashed prior attempt of this very batch, and
-        // folding it into base would break the retry's own-batch
-        // exclusion and re-delivery gate.
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0 &&
-            idxCommitted)
-          graft.ops.TextDedup.compactMinhashIndexExcept(sp, indexDir,
-            Set(s"$key-$batchId"))
-        val cached = batch.persist() // read twice: probe + signature append
-        try {
-          val pairs =
-            if (idxCommitted) {
-              val idx0 = graft.ops.TextDedup.readMinhashIndex(sp, indexDir)
-              // a flat (writeMinhashIndex-shaped) dir would survive exactly
-              // one append before partition discovery hits conflicting
-              // directory depths — reject it up front with the repair
-              require(idx0.columns.contains("batch"),
-                s"$indexDir is a flat index (no batch=<key> partitions); " +
-                  "seed a streaming index with appendMinhashIndexBatch " +
-                  "instead of writeMinhashIndex, or migrate the flat " +
-                  "index with compactMinhashIndex")
-              // exclude this batch's OWN partition from the probe: a retry
-              // that crashed between the append and the streaming commit
-              // re-runs with its signatures already in the index, and
-              // probing them would emit spurious intra-batch pairs. The
-              // key is incarnation-qualified, so a PREVIOUS incarnation's
-              // same-numbered batch is NOT excluded.
-              // cast FIRST: a numeric-keyed legacy layout infers batch as int,
-              // and int =!= string coerces the literal to null — which would
-              // silently filter out the ENTIRE prior index
-              val idx = idx0.filter(
-                col("batch").cast("string") =!= lit(s"$key-$batchId"))
-              // re-delivered ids are the duplicate class the batch=<key>
-              // layout does NOT structurally prevent (a re-crawled doc in
-              // a later file): fail loudly BEFORE the append corrupts the
-              // index. One column-pruned scan + broadcast semi-join — no
-              // shuffle, unlike the full groupBy gate validateIds=false
-              // skips (retries of THIS batch are excluded, so they don't
-              // false-positive).
-              // no broadcast hint: an AvailableNow backlog batch can be
-              // millions of rows — let AQE pick the join strategy
-              val redelivered = idx.select("id").join(
-                cached.select(col(idCol).as("id")).distinct(), "id")
-                .take(1)
-              require(redelivered.isEmpty,
-                s"id ${redelivered.headOption.map(_.get(0)).orNull} was " +
-                  "already ingested by an earlier batch; dedup upstream " +
-                  "(dedupDocStream) or repair the index before appending")
-              graft.ops.TextDedup.incrementalNearDups(cached, idx,
-                textCol, idCol, shingleLen, numHashes, bands, maxBucket,
-                validateIds = false)
-            } else // first-ever ingest: nothing to collide with, typed empty
-              cached.select(col(idCol).as("id_new"), col(idCol).as("id_old")).limit(0)
-          pairs.write.mode("overwrite").parquet(s"$pairsDir/batch=$key-$batchId")
-          graft.ops.TextDedup.appendMinhashIndexBatchKeyed(cached, textCol, idCol,
-            indexDir, s"$key-$batchId", shingleLen, numHashes, bands)
-        } finally {
-          cached.unpersist(false)
-          ()
-        }
+    val ix = IndexKind(indexDir, "_compacting", Seq(pairsDir), "batch",
+      s"$indexDir is a flat index (no batch=<key> partitions); " +
+        "seed a streaming index with appendMinhashIndexBatch " +
+        "instead of writeMinhashIndex, or migrate the flat " +
+        "index with compactMinhashIndex",
+      RejectRedelivered(idCol), compactEvery,
+      graft.ops.TextDedup.compactMinhashIndexExcept(_, indexDir, _))
+    // read twice: probe + signature append
+    indexStream(docs, checkpoint, ix, _.persist()) { (cached, prior, own) =>
+      val pairs = prior match {
+        case Some(idx) => graft.ops.TextDedup.incrementalNearDups(cached, idx,
+          textCol, idCol, shingleLen, numHashes, bands, maxBucket,
+          validateIds = false)
+        case None => // first-ever ingest: nothing to collide with, typed empty
+          cached.select(col(idCol).as("id_new"), col(idCol).as("id_old")).limit(0)
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      pairs.write.mode("overwrite").parquet(s"$pairsDir/batch=$own")
+      graft.ops.TextDedup.appendMinhashIndexBatchKeyed(cached, textCol, idCol,
+        indexDir, own, shingleLen, numHashes, bands)
+    }
   }
 
   /** Streaming incremental EMBEDDING near-dup dedup — the vector twin of
@@ -301,65 +394,27 @@ object Streaming {
       threshold: Double = 0.5, numTables: Int = 8, planesPerTable: Int = 6,
       dim: Int = 64, seed: Long = 42L, probeBits: Int = 1,
       compactEvery: Int = 0): StreamingQuery = {
-    val key = runKey(checkpoint)
-    vecs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        recoverStage(sp, indexDir, "_compacting")
-        val idxPath = new org.apache.hadoop.fs.Path(indexDir)
-        val fs = idxPath.getFileSystem(sp.sparkContext.hadoopConfiguration)
-        // committed-data gate, not bare fs.exists — see hasCommittedParquet
-        val idxCommitted = hasCommittedParquet(sp, indexDir, Seq(pairsDir), s"$key-$batchId")
-        // batch-start auto-compaction, own partition excluded — see
-        // incrementalDedupStream
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0 &&
-            idxCommitted)
-          graft.ops.VectorSim.compactSignIndexExcept(sp, indexDir,
-            Set(s"$key-$batchId"))
-        val cached = batch.persist() // read twice: probe + signature append
-        try {
-          val pairs =
-            if (idxCommitted) {
-              // incarnation-keyed own-batch exclusion, flat-dir rejection,
-              // and re-delivered-id gate: see incrementalDedupStream
-              val idx0 = graft.ops.VectorSim.readSignIndex(sp, indexDir)
-              require(idx0.columns.contains("batch"),
-                s"$indexDir is a flat index (no batch=<key> partitions); " +
-                  "seed a streaming index with appendSignIndexBatch " +
-                  "instead of writeSignIndex, or migrate the flat index " +
-                  "with compactSignIndex")
-              // cast FIRST: a numeric-keyed legacy layout infers batch as int,
-              // and int =!= string coerces the literal to null — which would
-              // silently filter out the ENTIRE prior index
-              val idx = idx0.filter(
-                col("batch").cast("string") =!= lit(s"$key-$batchId"))
-              // no broadcast hint: an AvailableNow backlog batch can be
-              // millions of rows — let AQE pick the join strategy
-              val redelivered = idx.select("id").join(
-                cached.select(col(idCol).as("id")).distinct(), "id")
-                .take(1)
-              require(redelivered.isEmpty,
-                s"id ${redelivered.headOption.map(_.get(0)).orNull} was " +
-                  "already ingested by an earlier batch; dedup upstream " +
-                  "or repair the index before appending")
-              graft.ops.VectorSim.incrementalCosineNearDups(cached, idx,
-                idCol, vecCol, threshold, numTables, planesPerTable,
-                dim, seed, probeBits, validateIds = false)
-            } else // first-ever ingest: nothing to collide with, typed empty
-              cached.select(col(idCol).as("id_new"), col(idCol).as("id_old"),
-                lit(0.0).as("cosine")).limit(0)
-          pairs.write.mode("overwrite").parquet(s"$pairsDir/batch=$key-$batchId")
-          graft.ops.VectorSim.appendSignIndexBatchKeyed(cached, idCol, vecCol,
-            indexDir, s"$key-$batchId", numTables, planesPerTable, dim, seed)
-          ()
-        } finally {
-          cached.unpersist(false)
-          ()
-        }
+    val ix = IndexKind(indexDir, "_compacting", Seq(pairsDir), "batch",
+      s"$indexDir is a flat index (no batch=<key> partitions); " +
+        "seed a streaming index with appendSignIndexBatch " +
+        "instead of writeSignIndex, or migrate the flat index " +
+        "with compactSignIndex",
+      RejectRedelivered(idCol), compactEvery,
+      graft.ops.VectorSim.compactSignIndexExcept(_, indexDir, _))
+    // read twice: probe + signature append
+    indexStream(vecs, checkpoint, ix, _.persist()) { (cached, prior, own) =>
+      val pairs = prior match {
+        case Some(idx) => graft.ops.VectorSim.incrementalCosineNearDups(cached,
+          idx, idCol, vecCol, threshold, numTables, planesPerTable, dim, seed,
+          probeBits, validateIds = false)
+        case None => // first-ever ingest: nothing to collide with, typed empty
+          cached.select(col(idCol).as("id_new"), col(idCol).as("id_old"),
+            lit(0.0).as("cosine")).limit(0)
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      pairs.write.mode("overwrite").parquet(s"$pairsDir/batch=$own")
+      graft.ops.VectorSim.appendSignIndexBatchKeyed(cached, idCol, vecCol,
+        indexDir, own, numTables, planesPerTable, dim, seed)
+    }
   }
 
   /** Streaming incremental IMAGE near-dup dedup — the multimodal twin of
@@ -378,45 +433,26 @@ object Streaming {
       pairsDir: String, checkpoint: String,
       pngCol: String = "png", idCol: String = "media_id",
       maxHamming: Int = 6): StreamingQuery = {
-    val key = runKey(checkpoint)
-    images.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        val idxPath = new org.apache.hadoop.fs.Path(indexDir)
-        val fs = idxPath.getFileSystem(sp.sparkContext.hadoopConfiguration)
-        // committed-data gate, not bare fs.exists — see hasCommittedParquet
-        val idxCommitted = hasCommittedParquet(sp, indexDir, Seq(pairsDir), s"$key-$batchId")
-        // decode once, read twice (probe + append)
-        val hashes = graft.ops.ImageHash.pngHashes(batch, idCol, pngCol)
-          .persist()
-        try {
-          val pairs =
-            if (idxCommitted) {
-              // incarnation-keyed own-batch exclusion + re-delivery gate:
-              // see incrementalDedupStream
-              val idx = sp.read.parquet(indexDir).filter(
-                col("batch").cast("string") =!= lit(s"$key-$batchId"))
-              val redelivered = idx.select(col(idCol)).join(
-                hashes.select(col(idCol)).distinct(), Seq(idCol)).take(1)
-              require(redelivered.isEmpty,
-                s"$idCol ${redelivered.headOption.map(_.get(0)).orNull} was " +
-                  "already ingested by an earlier batch; dedup upstream " +
-                  "or repair the index before appending")
-              graft.ops.ImageHash.phashMatches(hashes, idx, idCol, "dhash",
-                maxHamming)
-            } else // first-ever ingest: nothing to collide with, typed empty
-              hashes.select(col(idCol).as("id_probe"),
-                col(idCol).as("id_index"), lit(0).as("hamming")).limit(0)
-          pairs.write.mode("overwrite").parquet(s"$pairsDir/batch=$key-$batchId")
-          hashes.write.mode("overwrite").parquet(s"$indexDir/batch=$key-$batchId")
-        } finally {
-          hashes.unpersist(false)
-          ()
-        }
+    // no compactor rewrites this index yet; the stage recovery still runs
+    // so that every index loop starts its batch the same way
+    val ix = IndexKind(indexDir, "_compacting", Seq(pairsDir), "batch",
+      s"$indexDir is a flat index (no batch=<key> partitions); an image " +
+        "index is written by incrementalImageDedupStream only",
+      RejectRedelivered(idCol, indexIdCol = idCol))
+    // decode once, read twice (probe + append)
+    indexStream(images, checkpoint, ix,
+        graft.ops.ImageHash.pngHashes(_, idCol, pngCol).persist()) {
+        (hashes, prior, own) =>
+      val pairs = prior match {
+        case Some(idx) =>
+          graft.ops.ImageHash.phashMatches(hashes, idx, idCol, "dhash", maxHamming)
+        case None => // first-ever ingest: nothing to collide with, typed empty
+          hashes.select(col(idCol).as("id_probe"),
+            col(idCol).as("id_index"), lit(0).as("hamming")).limit(0)
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      pairs.write.mode("overwrite").parquet(s"$pairsDir/batch=$own")
+      hashes.write.mode("overwrite").parquet(s"$indexDir/batch=$own")
+    }
   }
 
   /** Streaming WARC ingestion — stage -1 of the web-corpus funnel as a
@@ -434,38 +470,31 @@ object Streaming {
     */
   def warcIngestStream(containers: DataFrame, pagesDir: String,
       quarantineDir: String, checkpoint: String,
-      idCol: String = "cid", warcCol: String = "warc"): StreamingQuery = {
-    val key = runKey(checkpoint)
-    containers.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val recs = graft.ingest.WarcIngest.readWarc(batch, idCol, warcCol)
-          .persist() // two consumers: page split + census split
-        try {
-          // the census is the exact COMPLEMENT of the clean-page split
-          // (null-safe: structural records carry NULL content types) —
-          // every record lands on exactly one side, so a non-200
-          // response or a non-HTML payload can never silently vanish
-          // between the sinks
-          val cleanHtml = coalesce(
-            col("reason").isNull && col("warc_type") === "response" &&
-              col("http_status") === 200 &&
-              lower(col("content_type")).contains("text/html"),
-            lit(false))
-          recs.filter(cleanHtml)
-            .select(col("url"), col("fetch_ts"), col("body_text").as("html"))
-            .write.mode("overwrite").parquet(s"$pagesDir/batch=$key-$batchId")
-          recs.filter(!cleanHtml)
-            .write.mode("overwrite")
-            .parquet(s"$quarantineDir/batch=$key-$batchId")
-        } finally {
-          recs.unpersist(false)
-          ()
-        }
+      idCol: String = "cid", warcCol: String = "warc"): StreamingQuery =
+    microBatch(containers, checkpoint) { (batch, _, own) =>
+      val recs = graft.ingest.WarcIngest.readWarc(batch, idCol, warcCol)
+        .persist() // two consumers: page split + census split
+      try {
+        // the census is the exact COMPLEMENT of the clean-page split
+        // (null-safe: structural records carry NULL content types) —
+        // every record lands on exactly one side, so a non-200
+        // response or a non-HTML payload can never silently vanish
+        // between the sinks
+        val cleanHtml = coalesce(
+          col("reason").isNull && col("warc_type") === "response" &&
+            col("http_status") === 200 &&
+            lower(col("content_type")).contains("text/html"),
+          lit(false))
+        recs.filter(cleanHtml)
+          .select(col("url"), col("fetch_ts"), col("body_text").as("html"))
+          .write.mode("overwrite").parquet(s"$pagesDir/batch=$own")
+        recs.filter(!cleanHtml)
+          .write.mode("overwrite").parquet(s"$quarantineDir/batch=$own")
+      } finally {
+        recs.unpersist(false)
+        ()
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+    }
 
   /** Streaming search-index maintenance — the query-time production loop
     * the persisted BM25 index ([[graft.ops.TextRank.writeSearchIndex]])
@@ -482,61 +511,34 @@ object Streaming {
     * structurally prevent) fail loudly before the append: one id-pruned
     * read of the norms (linear in corpus doc count, not a corpus text
     * scan) semi-joined against the batch, own-segment excluded so the
-    * retry path stays legitimate. Run
-    * [[graft.ops.TextRank.mergeSearchIndexSegments]] between stream
-    * incarnations to fold accumulated segments into one.
+    * retry path stays legitimate. With `compactEvery > 0` the stream
+    * auto-merges at batch start (the streaming twin of
+    * [[graft.ops.TextRank.mergeSearchIndexSegments]], own segment
+    * excluded), keeping the served segment count bounded; run the merge
+    * between stream incarnations to fold accumulated segments into one.
     */
   def searchIndexMaintenanceStream(docs: DataFrame, indexDir: String,
       checkpoint: String, textCol: String = "text", idCol: String = "doc_id",
       blockSize: Int = 1024, compactEvery: Int = 0,
       positions: Boolean = false): StreamingQuery = {
-    val key = runKey(checkpoint)
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        recoverStage(sp, indexDir, "_merging")
-        val normsPath = new org.apache.hadoop.fs.Path(s"$indexDir/norms")
-        val fs = normsPath.getFileSystem(sp.sparkContext.hadoopConfiguration)
-        // committed-data gate, not bare fs.exists — see hasCommittedParquet
-        val normsCommitted = hasCommittedParquet(sp, s"$indexDir/norms",
-          Seq(s"$indexDir/postings"), s"$key-$batchId")
-        // batch-start auto-merge, own segment excluded — the streaming
-        // twin of mergeSearchIndexSegments; keeps the served segment
-        // count bounded under continuous ingest (see
-        // incrementalDedupStream for the own-partition reasoning)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0 &&
-            normsCommitted)
-          graft.ops.TextRank.mergeSearchIndexSegmentsExcept(sp, indexDir,
-            blockSize, Set(s"$key-$batchId"))
-        val cached = batch.persist() // read thrice: gate + postings + norms
-        try {
-          if (normsCommitted) {
-            // cast FIRST — see incrementalDedupStream's legacy-layout note
-            val norms = sp.read.parquet(s"$indexDir/norms")
-              .filter(col("seg").cast("string") =!= lit(s"$key-$batchId"))
-            val redelivered = norms.select("id").join(
-              cached.select(col(idCol).as("id")).distinct(), "id")
-              .take(1)
-            require(redelivered.isEmpty,
-              s"doc ${redelivered.headOption.map(_.get(0)).orNull} was " +
-                "already indexed by an earlier batch; dedup upstream " +
-                "(dedupDocStream) or repair the index before appending")
-          }
-          graft.ops.TextRank.appendSearchIndexBatch(cached, textCol, idCol,
-            indexDir, s"$key-$batchId", blockSize)
-          // optional phrase-serving component: same segment key, same
-          // idempotent-overwrite retry contract; merges fold it too
-          if (positions)
-            graft.ops.TextRank.appendPositionsBatch(cached, textCol, idCol,
-              indexDir, s"$key-$batchId")
-        } finally {
-          cached.unpersist(false)
-          ()
-        }
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    // the gate reads the norms component: one row per doc, keyed by seg
+    val ix = IndexKind(indexDir, "_merging", Seq(s"$indexDir/postings"), "seg",
+      s"$indexDir/norms has no seg=<key> segments; build the index with " +
+        "writeSearchIndex or appendSearchIndexBatch",
+      RejectRedelivered(idCol), compactEvery,
+      graft.ops.TextRank.mergeSearchIndexSegmentsExcept(_, indexDir,
+        blockSize, _),
+      subdir = "/norms")
+    // read thrice: gate + postings + norms
+    indexStream(docs, checkpoint, ix, _.persist()) { (cached, _, own) =>
+      graft.ops.TextRank.appendSearchIndexBatch(cached, textCol, idCol,
+        indexDir, own, blockSize)
+      // optional phrase-serving component: same segment key, same
+      // idempotent-overwrite retry contract; merges fold it too
+      if (positions)
+        graft.ops.TextRank.appendPositionsBatch(cached, textCol, idCol,
+          indexDir, own)
+    }
   }
 
   /** Streaming decontamination filter: each micro-batch probes the
@@ -556,32 +558,25 @@ object Streaming {
     */
   def decontamFilterStream(docs: DataFrame, indexDir: String,
       cleanDir: String, flaggedDir: String, checkpoint: String,
-      textCol: String = "text", idCol: String = "doc_id"): StreamingQuery = {
-    val key = runKey(checkpoint)
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cached = batch.persist() // read twice: flagged probe + anti join
-        try {
-          val flagged = graft.ops.CorpusOps.incrementalContamination(
-            cached, idCol, textCol, indexDir)
-          flagged.write.mode("overwrite")
-            .parquet(s"$flaggedDir/batch=$key-$batchId")
-          // anti-join against the JUST-WRITTEN flagged partition rather
-          // than recomputing the probe: one probe per batch, and the
-          // clean split can never disagree with its own audit trail
-          val flaggedIds = cached.sparkSession.read
-            .parquet(s"$flaggedDir/batch=$key-$batchId").select(idCol)
-          cached.join(flaggedIds, Seq(idCol), "left_anti")
-            .write.mode("overwrite").parquet(s"$cleanDir/batch=$key-$batchId")
-        } finally {
-          cached.unpersist(false)
-          ()
-        }
+      textCol: String = "text", idCol: String = "doc_id"): StreamingQuery =
+    microBatch(docs, checkpoint) { (batch, _, own) =>
+      val cached = batch.persist() // read twice: flagged probe + anti join
+      try {
+        val flagged = graft.ops.CorpusOps.incrementalContamination(
+          cached, idCol, textCol, indexDir)
+        flagged.write.mode("overwrite").parquet(s"$flaggedDir/batch=$own")
+        // anti-join against the JUST-WRITTEN flagged partition rather
+        // than recomputing the probe: one probe per batch, and the
+        // clean split can never disagree with its own audit trail
+        val flaggedIds = cached.sparkSession.read
+          .parquet(s"$flaggedDir/batch=$own").select(idCol)
+        cached.join(flaggedIds, Seq(idCol), "left_anti")
+          .write.mode("overwrite").parquet(s"$cleanDir/batch=$own")
+      } finally {
+        cached.unpersist(false)
+        ()
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+    }
 
   /** Streaming exact-substring span detection — the continuous-ingest
     * loop over the persisted gram-count index
@@ -605,89 +600,36 @@ object Streaming {
       textCol: String = "text", idCol: String = "doc_id",
       minTokens: Int = 8, hashGrams: Boolean = false,
       compactEvery: Int = 0): StreamingQuery = {
-    val key = runKey(checkpoint)
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        recoverStage(sp, indexDir, "_compacting")
-        val own = s"$key-$batchId"
-        val idxCommitted = hasCommittedParquet(sp, indexDir, Seq(spansDir), own)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0 &&
-            idxCommitted)
-          graft.ops.TextDedup.compactGramCountIndexExcept(sp, indexDir,
-            Set(own))
-        val cached = batch.persist() // probe + ids gate + count append
-        try {
-          val spans =
-            if (idxCommitted) {
-              // re-delivered ids: the gram index holds no doc ids, so
-              // the `_ids` sidecar carries the gate — a re-crawled doc
-              // would inflate its own grams to "duplicated" and emit
-              // self-spans, corrupting the record silently. An index
-              // seeded OUTSIDE the stream (writeGramCountIndex over a
-              // historical corpus, release-cadence appends — the q90
-              // lifecycle) has no sidecar: the gate covers
-              // stream-delivered ids only, all it can know about. An
-              // EXISTING-but-unreadable sidecar is either this batch's
-              // own crashed first write (only base + own partitions
-              // beside it — retry state, proceed) or data loss next to
-              // other stream batches (fail loudly) — the
-              // hasCommittedParquet discrimination applied to the
-              // sidecar.
-              val idsStr = s"$indexDir/_ids"
-              val idsPath = new org.apache.hadoop.fs.Path(idsStr)
-              val fsIds = idsPath.getFileSystem(
-                sp.sparkContext.hadoopConfiguration)
-              val idsDf =
-                if (!fsIds.exists(idsPath)) None
-                else try Some(sp.read.parquet(idsStr)) catch {
-                  case e: org.apache.spark.sql.AnalysisException
-                      if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") ||
-                        e.getMessage.contains("Unable to infer schema") =>
-                    val others = fsIds.listStatus(
-                        new org.apache.hadoop.fs.Path(indexDir))
-                      .filter(_.isDirectory).map(_.getPath.getName)
-                      .filter(n => n.startsWith("batch=") &&
-                        n != "batch=base" && n != s"batch=$own")
-                    require(others.isEmpty,
-                      s"$idsStr holds no committed parquet but stream " +
-                        s"partitions ${others.mkString(", ")} exist: the " +
-                        "re-delivery sidecar lost data; repair it instead " +
-                        "of silently disarming the gate")
-                    None // own crashed first write: retry overwrites it
-                }
-              idsDf.foreach { ids =>
-                val prior = ids
-                  .filter(col("batch").cast("string") =!= lit(own))
-                val redelivered = prior.select("id").join(
-                  cached.select(col(idCol).as("id")).distinct(), "id").take(1)
-                require(redelivered.isEmpty,
-                  s"id ${redelivered.headOption.map(_.get(0)).orNull} was " +
-                    "already ingested by an earlier batch; dedup upstream " +
-                    "(dedupDocStream) or repair the index before appending")
-              }
-              graft.ops.TextDedup.incrementalExactSubstringSpans(
-                cached, textCol, idCol, indexDir, excludeBatch = Some(own))
-            } else // first ingest: only batch-internal duplication exists
-              graft.ops.TextDedup.exactSubstringSpans(
-                cached, textCol, idCol, minTokens, hashGrams)
-          spans.write.mode("overwrite").parquet(s"$spansDir/batch=$own")
-          cached.select(col(idCol).as("id"))
-            .write.mode("overwrite").parquet(s"$indexDir/_ids/batch=$own")
-          if (idxCommitted)
-            graft.ops.TextDedup.appendGramCountBatchKeyed(cached, textCol,
-              idCol, indexDir, own)
-          else // seed: the batch's counts ARE the index, stamped
-            graft.ops.TextDedup.seedGramCountBatch(cached, textCol, idCol,
-              indexDir, own, minTokens, hashGrams)
-        } finally {
-          cached.unpersist(false)
-          ()
-        }
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    // re-delivered ids: the gram index holds no doc ids, so the `_ids`
+    // sidecar carries the gate — a re-crawled doc would inflate its own
+    // grams to "duplicated" and emit self-spans, corrupting the record
+    // silently. An index seeded OUTSIDE the stream (writeGramCountIndex
+    // over a historical corpus, release-cadence appends — the q90
+    // lifecycle) has no sidecar: the gate covers stream-delivered ids
+    // only, all it can know about.
+    val ix = IndexKind(indexDir, "_compacting", Seq(spansDir), "batch",
+      s"$indexDir is a flat gram-count index (no batch=<key> " +
+        "partitions); seed it with writeGramCountIndex",
+      RejectRedelivered(idCol, idsDir = Some(s"$indexDir/_ids")), compactEvery,
+      graft.ops.TextDedup.compactGramCountIndexExcept(_, indexDir, _))
+    // read thrice: probe + ids gate + count append
+    indexStream(docs, checkpoint, ix, _.persist()) { (cached, prior, own) =>
+      val spans =
+        if (prior.isDefined) graft.ops.TextDedup.incrementalExactSubstringSpans(
+          cached, textCol, idCol, indexDir, excludeBatch = Some(own))
+        else // first ingest: only batch-internal duplication exists
+          graft.ops.TextDedup.exactSubstringSpans(
+            cached, textCol, idCol, minTokens, hashGrams)
+      spans.write.mode("overwrite").parquet(s"$spansDir/batch=$own")
+      cached.select(col(idCol).as("id"))
+        .write.mode("overwrite").parquet(s"$indexDir/_ids/batch=$own")
+      if (prior.isDefined)
+        graft.ops.TextDedup.appendGramCountBatchKeyed(cached, textCol,
+          idCol, indexDir, own)
+      else // seed: the batch's counts ARE the index, stamped
+        graft.ops.TextDedup.seedGramCountBatch(cached, textCol, idCol,
+          indexDir, own, minTokens, hashGrams)
+    }
   }
 
   /** Streaming SEMANTIC decontamination filter — the embedding-space
@@ -707,48 +649,40 @@ object Streaming {
       cleanDir: String, flaggedDir: String, quarantineDir: String,
       checkpoint: String,
       vecCol: String = "embedding", idCol: String = "vec_id",
-      threshold: Double = 0.25): StreamingQuery = {
-    val key = runKey(checkpoint)
-    vecs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // UNSCORABLE rows (ADVICE r15): a null / zero-norm / NaN
-        // embedding carries no similarity claim — the probe's
-        // degenerate-norm guard drops it, so letting it ride to the
-        // anti-join would certify a failed encode as "clean" with no
-        // audit trail. Split it out FIRST into its own quarantine
-        // partition: clean ∪ flagged ∪ quarantined == the batch, and a
-        // decontamination filter never silently passes what it could
-        // not examine. (!isnan is load-bearing: NaN > 0 is TRUE under
-        // Spark's NaN-greatest ordering — the VectorSim guard note.)
-        val nrm = sqrt(graft.ops.VectorSim.normSq(col(vecCol)))
-        val scorableP = col(vecCol).isNotNull && nrm > 0 && !isnan(nrm)
-        val cached = batch.persist() // read thrice: quarantine + probe + anti
-        try {
-          cached.filter(!scorableP)
-            .write.mode("overwrite")
-            .parquet(s"$quarantineDir/batch=$key-$batchId")
-          val scorable = cached.filter(scorableP)
-          val flagged = graft.ops.VectorSim.incrementalSemanticDecontam(
-            scorable, idCol, vecCol, indexDir, threshold)
-          flagged.write.mode("overwrite")
-            .parquet(s"$flaggedDir/batch=$key-$batchId")
-          // anti-join against the JUST-WRITTEN flagged partition — one
-          // probe per batch, and the clean split can never disagree
-          // with its own audit trail (the decontamFilterStream rule)
-          val flaggedIds = cached.sparkSession.read
-            .parquet(s"$flaggedDir/batch=$key-$batchId")
-            .select(col("doc_id").as(idCol))
-          scorable.join(flaggedIds, Seq(idCol), "left_anti")
-            .write.mode("overwrite").parquet(s"$cleanDir/batch=$key-$batchId")
-        } finally {
-          cached.unpersist(false)
-          ()
-        }
+      threshold: Double = 0.25): StreamingQuery =
+    microBatch(vecs, checkpoint) { (batch, _, own) =>
+      // UNSCORABLE rows (ADVICE r15): a null / zero-norm / NaN
+      // embedding carries no similarity claim — the probe's
+      // degenerate-norm guard drops it, so letting it ride to the
+      // anti-join would certify a failed encode as "clean" with no
+      // audit trail. Split it out FIRST into its own quarantine
+      // partition: clean ∪ flagged ∪ quarantined == the batch, and a
+      // decontamination filter never silently passes what it could
+      // not examine. (!isnan is load-bearing: NaN > 0 is TRUE under
+      // Spark's NaN-greatest ordering — the VectorSim guard note.)
+      val nrm = sqrt(graft.ops.VectorSim.normSq(col(vecCol)))
+      val scorableP = col(vecCol).isNotNull && nrm > 0 && !isnan(nrm)
+      val cached = batch.persist() // read thrice: quarantine + probe + anti
+      try {
+        cached.filter(!scorableP)
+          .write.mode("overwrite").parquet(s"$quarantineDir/batch=$own")
+        val scorable = cached.filter(scorableP)
+        val flagged = graft.ops.VectorSim.incrementalSemanticDecontam(
+          scorable, idCol, vecCol, indexDir, threshold)
+        flagged.write.mode("overwrite").parquet(s"$flaggedDir/batch=$own")
+        // anti-join against the JUST-WRITTEN flagged partition — one
+        // probe per batch, and the clean split can never disagree
+        // with its own audit trail (the decontamFilterStream rule)
+        val flaggedIds = cached.sparkSession.read
+          .parquet(s"$flaggedDir/batch=$own")
+          .select(col("doc_id").as(idCol))
+        scorable.join(flaggedIds, Seq(idCol), "left_anti")
+          .write.mode("overwrite").parquet(s"$cleanDir/batch=$own")
+      } finally {
+        cached.unpersist(false)
+        ()
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+    }
 
   /** Streaming maintenance of the cross-source overlap ledger (the
     * q246/q247 contamination matrix, kept current under continuous
@@ -775,44 +709,36 @@ object Streaming {
   def overlapLedgerStream(docs: DataFrame, indexDir: String,
       ledgerDir: String, checkpoint: String, sourceCol: String = "source",
       textCol: String = "text", n: Int = 4): StreamingQuery = {
-    val key = runKey(checkpoint)
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        val own = s"$key-$batchId"
-        // committed-data gate (shared helper): a first batch killed
-        // mid-append leaves the index dir existing with no committed
-        // parquet — treat that as the true empty prior state; an
-        // unreadable index NEXT TO a populated ledger is data loss and
-        // fails loudly inside the helper instead of double-counting
-        val index =
-          if (hasCommittedParquet(sp, indexDir,
-              Seq(s"$ledgerDir/shared", s"$ledgerDir/totals"), own))
-            sp.read.parquet(indexDir)
-              .filter(col("batch").cast("string") =!= lit(own))
-              .select("source", "gram")
-          else // first-ever ingest (or its crashed retry): typed empty
-            graft.ops.CorpusOps.sourceGrams(batch, sourceCol, textCol, n)
-              .limit(0)
-        // read three times: shared delta (twice — both join sides) +
-        // totals + index append
-        val fresh = graft.ops.CorpusOps
-          .freshSourceGrams(index, batch, sourceCol, textCol, n).persist()
-        try {
-          graft.ops.CorpusOps.overlapSharedDelta(index, fresh)
-            .write.mode("overwrite").parquet(s"$ledgerDir/shared/batch=$own")
-          fresh.groupBy("source").agg(count(lit(1)).as("n_grams"))
-            .write.mode("overwrite").parquet(s"$ledgerDir/totals/batch=$own")
-          fresh.select("source", "gram")
-            .write.mode("overwrite").parquet(s"$indexDir/batch=$own")
-        } finally {
-          fresh.unpersist(false)
-          ()
-        }
+    // an unreadable index NEXT TO a populated ledger is data loss and
+    // fails loudly in the gate instead of double-counting; no compactor
+    // rewrites this index yet, the stage recovery runs as in every loop
+    val ix = IndexKind(indexDir, "_compacting",
+      Seq(s"$ledgerDir/shared", s"$ledgerDir/totals"), "batch",
+      s"$indexDir is a flat index (no batch=<key> partitions); an overlap " +
+        "index is written by overlapLedgerStream only",
+      AdmitRedelivered("re-delivered (source, gram) pairs anti-join " +
+        "against the index and add a zero delta: that is the ledger's " +
+        "semantics, not a corruption"))
+    indexStream(docs, checkpoint, ix) { (batch, prior, own) =>
+      val index = prior.map(_.select("source", "gram")).getOrElse(
+        // first-ever ingest (or its crashed retry): typed empty
+        graft.ops.CorpusOps.sourceGrams(batch, sourceCol, textCol, n).limit(0))
+      // read three times: shared delta (twice — both join sides) +
+      // totals + index append
+      val fresh = graft.ops.CorpusOps
+        .freshSourceGrams(index, batch, sourceCol, textCol, n).persist()
+      try {
+        graft.ops.CorpusOps.overlapSharedDelta(index, fresh)
+          .write.mode("overwrite").parquet(s"$ledgerDir/shared/batch=$own")
+        fresh.groupBy("source").agg(count(lit(1)).as("n_grams"))
+          .write.mode("overwrite").parquet(s"$ledgerDir/totals/batch=$own")
+        fresh.select("source", "gram")
+          .write.mode("overwrite").parquet(s"$indexDir/batch=$own")
+      } finally {
+        fresh.unpersist(false)
+        ()
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    }
   }
 
   /** Streaming EXACT dedup over a persisted fingerprint index — the
@@ -852,56 +778,43 @@ object Streaming {
       compactEvery: Int = 0, bloomDir: String = null,
       bloomExpectedItems: Long = 1L << 20,
       bloomFpp: Double = 0.01): StreamingQuery = {
-    val key = runKey(checkpoint)
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        recoverStage(sp, indexDir, "_compacting")
-        val idxPath = new org.apache.hadoop.fs.Path(indexDir)
-        val fs = idxPath.getFileSystem(sp.sparkContext.hadoopConfiguration)
-        // committed-data gate, not bare fs.exists — see hasCommittedParquet
-        val idxCommitted = hasCommittedParquet(sp, indexDir, Seq(cleanDir), s"$key-$batchId")
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0 &&
-            idxCommitted)
-          graft.ops.TextDedup.compactMinhashIndexExcept(sp, indexDir,
-            Set(s"$key-$batchId"))
-        val survivors =
-          if (idxCommitted) {
-            val idx = sp.read.parquet(indexDir)
-            require(idx.columns.contains("batch"),
-              s"$indexDir is not a batch-partitioned fingerprint index")
-            // cast FIRST — see incrementalDedupStream's legacy-layout note
-            val priorFps = idx
-              .filter(col("batch").cast("string") =!= lit(s"$key-$batchId"))
-            val bloom =
-              if (bloomDir != null &&
-                  fs.exists(new org.apache.hadoop.fs.Path(bloomDir)))
-                Some(graft.ops.TextDedup.readFpBloom(sp, bloomDir))
-              else None
-            bloom match {
-              case Some(b) => graft.ops.TextDedup
-                .bloomPrunedIncrementalExactDedup(batch, priorFps, b,
-                  textCol, idCol)
-              case None => graft.ops.TextDedup
-                .incrementalExactDedup(batch, priorFps, textCol, idCol)
-            }
-          } else graft.ops.TextDedup.exactDedup(batch, textCol, idCol)
-        survivors.write.mode("overwrite")
-          .parquet(s"$cleanDir/batch=$key-$batchId")
-        // fingerprints of the JUST-WRITTEN clean partition: the index can
-        // never disagree with the clean output it guards
-        val clean = sp.read.parquet(s"$cleanDir/batch=$key-$batchId")
-        clean
-          .select(graft.ops.TextDedup.fingerprint(col(textCol)).as("fp"),
-            col(idCol).as("id"))
-          .write.mode("overwrite").parquet(s"$indexDir/batch=$key-$batchId")
-        if (bloomDir != null)
-          graft.ops.TextDedup.writeFpBloomSegment(clean, textCol, bloomDir,
-            s"$key-$batchId", bloomExpectedItems, bloomFpp)
+    val ix = IndexKind(indexDir, "_compacting", Seq(cleanDir), "batch",
+      s"$indexDir is not a batch-partitioned fingerprint index",
+      AdmitRedelivered("dropping re-delivered content is this loop's " +
+        "semantics: the fingerprint anti-join filters it"),
+      compactEvery,
+      graft.ops.TextDedup.compactMinhashIndexExcept(_, indexDir, _))
+    // persists nothing: the batch is read once, the clean rows re-read
+    // from their committed partition
+    indexStream(docs, checkpoint, ix) { (batch, prior, own) =>
+      val sp = batch.sparkSession
+      val survivors = prior match {
+        case Some(priorFps) =>
+          val bloom = Option(bloomDir).filter { d =>
+            val p = new Path(d)
+            p.getFileSystem(sp.sparkContext.hadoopConfiguration).exists(p)
+          }.map(graft.ops.TextDedup.readFpBloom(sp, _))
+          bloom match {
+            case Some(b) => graft.ops.TextDedup
+              .bloomPrunedIncrementalExactDedup(batch, priorFps, b,
+                textCol, idCol)
+            case None => graft.ops.TextDedup
+              .incrementalExactDedup(batch, priorFps, textCol, idCol)
+          }
+        case None => graft.ops.TextDedup.exactDedup(batch, textCol, idCol)
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      survivors.write.mode("overwrite").parquet(s"$cleanDir/batch=$own")
+      // fingerprints of the JUST-WRITTEN clean partition: the index can
+      // never disagree with the clean output it guards
+      val clean = sp.read.parquet(s"$cleanDir/batch=$own")
+      clean
+        .select(graft.ops.TextDedup.fingerprint(col(textCol)).as("fp"),
+          col(idCol).as("id"))
+        .write.mode("overwrite").parquet(s"$indexDir/batch=$own")
+      if (bloomDir != null)
+        graft.ops.TextDedup.writeFpBloomSegment(clean, textCol, bloomDir,
+          own, bloomExpectedItems, bloomFpp)
+    }
   }
 
   /** Streaming versioned publish: every micro-batch commits `transform`
@@ -926,23 +839,17 @@ object Streaming {
       transform: DataFrame => DataFrame = identity,
       keepVersions: Int = 0): StreamingQuery = {
     require(keepVersions >= 0, "keepVersions must be >= 0 (0 keeps all)")
-    val key = runKey(checkpoint)
-    input.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.warehouse.VersionedTable.commitBatch(
-          transform(batch), tableDir, s"$key-$batchId")
-        // retention AFTER the commit: continuous publishing otherwise
-        // accumulates one immutable snapshot per batch forever. vacuum
-        // never touches the committed version, so a concurrent reader
-        // of the CURRENT snapshot is safe; only deep time travel ages out.
-        if (keepVersions > 0)
-          graft.warehouse.VersionedTable.vacuum(
-            batch.sparkSession, tableDir, keepVersions)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    microBatch(input, checkpoint) { (batch, _, own) =>
+      graft.warehouse.VersionedTable.commitBatch(transform(batch), tableDir, own)
+      // retention AFTER the commit: continuous publishing otherwise
+      // accumulates one immutable snapshot per batch forever. vacuum
+      // never touches the committed version, so a concurrent reader
+      // of the CURRENT snapshot is safe; only deep time travel ages out.
+      if (keepVersions > 0)
+        graft.warehouse.VersionedTable.vacuum(
+          batch.sparkSession, tableDir, keepVersions)
+      ()
+    }
   }
 
   /** Streaming MATERIALIZED-VIEW maintenance — the composition the CDC
@@ -976,52 +883,46 @@ object Streaming {
     require(keepVersions == 0 || keepVersions >= 2,
       "materializedViewStream needs keepVersions >= 2 (or 0 to keep all): " +
         "the next batch diffs against the previous table version")
-    val key = runKey(checkpoint)
-    input.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.warehouse.{IncrementalAgg, VersionedTable}
-        val sp = batch.sparkSession
-        val bk = s"$key-$batchId"
-        VersionedTable.commitBatch(transform(batch), tableDir, bk)
-        if (!VersionedTable.lastBatchKey(sp, viewDir).contains(bk)) {
-          val cur = VersionedTable.currentVersion(sp, tableDir).getOrElse(
-            throw new IllegalStateException(
-              s"table commit for batch $bk left no committed version at $tableDir"))
-          val view =
-            if (cur == 0L)
-              IncrementalAgg.countSumView(
-                VersionedTable.read(sp, tableDir), groupCol, measureCol)
-            else {
-              // lockstep gate: the protocol commits table and view once
-              // per batch from v0, so the view must sit at exactly cur-1
-              // here. Any desync (an out-of-band plain commit on either
-              // dir, a restart under a fresh checkpoint after a crash
-              // between the two commits) would make applyCdc fold the
-              // WRONG delta and corrupt the view silently forever —
-              // fail loudly instead and point at the rebuild.
-              val vv = VersionedTable.currentVersion(sp, viewDir)
-              require(vv.contains(cur - 1),
-                s"view at $viewDir is at version ${vv.orNull} but the table " +
-                  s"advanced to $cur; the view no longer corresponds to the " +
-                  "previous snapshot — rebuild it (countSumView over the " +
-                  "current table) before resuming maintenance")
-              IncrementalAgg.applyCdc(
-                VersionedTable.read(sp, viewDir),
-                VersionedTable.diffValues(sp, tableDir, cur - 1, cur, keyCols),
-                groupCol, measureCol)
-            }
-          VersionedTable.commitBatch(view, viewDir, bk)
-        }
-        // retention AFTER both commits
-        if (keepVersions > 0) {
-          graft.warehouse.VersionedTable.vacuum(sp, tableDir, keepVersions)
-          graft.warehouse.VersionedTable.vacuum(sp, viewDir, keepVersions)
-        }
-        ()
+    microBatch(input, checkpoint) { (batch, _, bk) =>
+      import graft.warehouse.{IncrementalAgg, VersionedTable}
+      val sp = batch.sparkSession
+      VersionedTable.commitBatch(transform(batch), tableDir, bk)
+      if (!VersionedTable.lastBatchKey(sp, viewDir).contains(bk)) {
+        val cur = VersionedTable.currentVersion(sp, tableDir).getOrElse(
+          throw new IllegalStateException(
+            s"table commit for batch $bk left no committed version at $tableDir"))
+        val view =
+          if (cur == 0L)
+            IncrementalAgg.countSumView(
+              VersionedTable.read(sp, tableDir), groupCol, measureCol)
+          else {
+            // lockstep gate: the protocol commits table and view once
+            // per batch from v0, so the view must sit at exactly cur-1
+            // here. Any desync (an out-of-band plain commit on either
+            // dir, a restart under a fresh checkpoint after a crash
+            // between the two commits) would make applyCdc fold the
+            // WRONG delta and corrupt the view silently forever —
+            // fail loudly instead and point at the rebuild.
+            val vv = VersionedTable.currentVersion(sp, viewDir)
+            require(vv.contains(cur - 1),
+              s"view at $viewDir is at version ${vv.orNull} but the table " +
+                s"advanced to $cur; the view no longer corresponds to the " +
+                "previous snapshot — rebuild it (countSumView over the " +
+                "current table) before resuming maintenance")
+            IncrementalAgg.applyCdc(
+              VersionedTable.read(sp, viewDir),
+              VersionedTable.diffValues(sp, tableDir, cur - 1, cur, keyCols),
+              groupCol, measureCol)
+          }
+        VersionedTable.commitBatch(view, viewDir, bk)
       }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      // retention AFTER both commits
+      if (keepVersions > 0) {
+        VersionedTable.vacuum(sp, tableDir, keepVersions)
+        VersionedTable.vacuum(sp, viewDir, keepVersions)
+      }
+      ()
+    }
   }
 
   /** Streaming incremental-statistics maintenance: every micro-batch
@@ -1038,24 +939,17 @@ object Streaming {
   def sketchStatsStream(input: DataFrame, sketchDir: String,
       checkpoint: String, valueCol: String,
       groupCols: Seq[String] = Nil, lgK: Int = 12,
-      compactEvery: Int = 0): StreamingQuery = {
-    val key = runKey(checkpoint)
-    input.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        recoverStage(sp, sketchDir, "_merging")
-        val p = new org.apache.hadoop.fs.Path(sketchDir)
-        val fs = p.getFileSystem(sp.sparkContext.hadoopConfiguration)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0 &&
-            fs.exists(p))
-          graft.ops.SketchStats.compactHll(sp, sketchDir, groupCols)
-        graft.ops.SketchStats.appendHllBatch(batch, valueCol, sketchDir,
-          s"$key-$batchId", groupCols, lgK)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      compactEvery: Int = 0): StreamingQuery =
+    microBatch(input, checkpoint, Some((sketchDir, "_merging"))) {
+        (batch, batchId, own) =>
+      val sp = batch.sparkSession
+      val p = new Path(sketchDir)
+      if (compactionDue(compactEvery, batchId) &&
+          p.getFileSystem(sp.sparkContext.hadoopConfiguration).exists(p))
+        graft.ops.SketchStats.compactHll(sp, sketchDir, groupCols)
+      graft.ops.SketchStats.appendHllBatch(batch, valueCol, sketchDir, own,
+        groupCols, lgK)
+    }
 
   /** Streaming EXACT-histogram maintenance: every micro-batch appends
     * its (bin, cnt) segment ([[graft.ops.SketchStats.appendHistBatch]]);
@@ -1066,17 +960,10 @@ object Streaming {
     * on [[graft.ops.SketchStats.histDrift]] see true counts per refresh.
     */
   def histStream(input: DataFrame, histDir: String, checkpoint: String,
-      valueCol: String, width: Double): StreamingQuery = {
-    val key = runKey(checkpoint)
-    input.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.SketchStats.appendHistBatch(batch, valueCol, histDir,
-          s"$key-$batchId", width)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      valueCol: String, width: Double): StreamingQuery =
+    microBatch(input, checkpoint) { (batch, _, own) =>
+      graft.ops.SketchStats.appendHistBatch(batch, valueCol, histDir, own, width)
+    }
 
   /** Streaming moments maintenance: every micro-batch appends its exact
     * decimal power-sum segment
@@ -1090,17 +977,11 @@ object Streaming {
     * [[graft.ops.SketchStats.compactMoments]] while stopped.
     */
   def momentStream(input: DataFrame, momDir: String, checkpoint: String,
-      valueCol: String, groupCols: Seq[String] = Nil): StreamingQuery = {
-    val key = runKey(checkpoint)
-    input.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.SketchStats.appendMomentsBatch(batch, valueCol, momDir,
-          s"$key-$batchId", groupCols)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      valueCol: String, groupCols: Seq[String] = Nil): StreamingQuery =
+    microBatch(input, checkpoint) { (batch, _, own) =>
+      graft.ops.SketchStats.appendMomentsBatch(batch, valueCol, momDir, own,
+        groupCols)
+    }
 
   /** Streaming heavy-hitter maintenance: every micro-batch appends its
     * bounded Misra-Gries segment
@@ -1116,17 +997,11 @@ object Streaming {
     */
   def freqStream(input: DataFrame, freqDir: String, checkpoint: String,
       valueCol: String, capacity: Int = 64,
-      groupCols: Seq[String] = Nil): StreamingQuery = {
-    val key = runKey(checkpoint)
-    input.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.SketchStats.appendFreqBatch(batch, valueCol, freqDir,
-          s"$key-$batchId", capacity, groupCols)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      groupCols: Seq[String] = Nil): StreamingQuery =
+    microBatch(input, checkpoint) { (batch, _, own) =>
+      graft.ops.SketchStats.appendFreqBatch(batch, valueCol, freqDir, own,
+        capacity, groupCols)
+    }
 
   /** Streaming count-min maintenance: every micro-batch appends its
     * bounded depth×width cell segment
@@ -1140,17 +1015,10 @@ object Streaming {
     * stream is stopped.
     */
   def cmStream(input: DataFrame, cmDir: String, checkpoint: String,
-      keyCol: String, width: Int = 256, depth: Int = 4): StreamingQuery = {
-    val key = runKey(checkpoint)
-    input.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.SketchStats.appendCmBatch(batch, keyCol, cmDir,
-          s"$key-$batchId", width, depth)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      keyCol: String, width: Int = 256, depth: Int = 4): StreamingQuery =
+    microBatch(input, checkpoint) { (batch, _, own) =>
+      graft.ops.SketchStats.appendCmBatch(batch, keyCol, cmDir, own, width, depth)
+    }
 
   /** Streaming EXACT-distinct bitmap maintenance: every micro-batch
     * appends its compressed-bitmap segment
@@ -1164,24 +1032,16 @@ object Streaming {
     */
   def bitmapStream(input: DataFrame, bmDir: String, checkpoint: String,
       idCol: String, groupCols: Seq[String] = Nil,
-      compactEvery: Int = 0): StreamingQuery = {
-    val key = runKey(checkpoint)
-    input.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        recoverStage(sp, bmDir, "_merging")
-        val p = new org.apache.hadoop.fs.Path(bmDir)
-        val fs = p.getFileSystem(sp.sparkContext.hadoopConfiguration)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0 &&
-            fs.exists(p))
-          graft.ops.SketchStats.compactBitmap(sp, bmDir, groupCols)
-        graft.ops.SketchStats.appendBitmapBatch(batch, idCol, bmDir,
-          s"$key-$batchId", groupCols)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      compactEvery: Int = 0): StreamingQuery =
+    microBatch(input, checkpoint, Some((bmDir, "_merging"))) {
+        (batch, batchId, own) =>
+      val sp = batch.sparkSession
+      val p = new Path(bmDir)
+      if (compactionDue(compactEvery, batchId) &&
+          p.getFileSystem(sp.sparkContext.hadoopConfiguration).exists(p))
+        graft.ops.SketchStats.compactBitmap(sp, bmDir, groupCols)
+      graft.ops.SketchStats.appendBitmapBatch(batch, idCol, bmDir, own, groupCols)
+    }
 
   /** Streaming domain-ledger maintenance — split assignment AT INGEST:
     * every micro-batch folds hosts to registrable domains, assigns the
@@ -1197,17 +1057,11 @@ object Streaming {
     */
   def domainLedgerStream(docs: DataFrame, ledgerDir: String,
       checkpoint: String, hostCol: Column,
-      tokensCol: Column): StreamingQuery = {
-    val key = runKey(checkpoint)
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.CorpusOps.appendDomainLedgerBatch(batch, hostCol,
-          tokensCol, ledgerDir, s"$key-$batchId")
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      tokensCol: Column): StreamingQuery =
+    microBatch(docs, checkpoint) { (batch, _, own) =>
+      graft.ops.CorpusOps.appendDomainLedgerBatch(batch, hostCol, tokensCol,
+        ledgerDir, own)
+    }
 
   // ---- stateful sessionization -------------------------------------------
 

@@ -889,4 +889,58 @@ class StreamingDedupSpec extends SparkSpec {
     assert(census.filter(col("reason") === "truncated_payload").count() == 1)
     assert(census.filter(col("http_status") === 404).count() == 1)
   }
+
+  test("index loops fail loudly on a re-delivered id and on a flat seed index (table-driven)") {
+    import graft.ops.{ImageHash, VectorSim}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val docs = (0L until 6L).map(i => (i, Seq.fill(12)(rnd.nextInt(40)).mkString(" ")))
+      .toDF("doc_id", "text")
+    val vecs = (0L until 6L).map(i => (i, Array.fill(64)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    // (loop, six rows with ids 0..5, id column, stream starter over
+    // (input, indexDir, pairsDir, checkpoint), flat-index seeder)
+    type Start = (DataFrame, String, String, String) => StreamingQuery
+    type Seed = (DataFrame, String) => Unit
+    val loops: Seq[(String, DataFrame, String, Start, Option[Seed])] = Seq(
+      ("minhash", docs, "doc_id", Streaming.incrementalDedupStream(_, _, _, _),
+        Some(TextDedup.writeMinhashIndex(_, "text", "doc_id", _))),
+      ("vector", vecs, "vec_id", Streaming.incrementalVectorDedupStream(_, _, _, _),
+        Some(VectorSim.writeSignIndex(_, "vec_id", "embedding", _))),
+      ("image",
+        ImageHash.plantedPngCorpus(spark, nBase = 6).filter(col("media_id") < 6),
+        "media_id", Streaming.incrementalImageDedupStream(_, _, _, _), None))
+    loops.foreach { case (name, rows, idCol, start, flatSeed) =>
+      val work = java.nio.file.Files.createTempDirectory(s"graft_sgate_$name").toString
+      // "" when the stream finishes, else every message on the cause chain
+      def run(raw: String, idx: String, ckpt: String): String =
+        try {
+          val q = start(spark.readStream.schema(rows.schema).parquet(raw), idx,
+            s"$work/pairs_$ckpt", s"$work/$ckpt")
+          assert(q.awaitTermination(180000), s"$name stream timed out")
+          ""
+        } catch {
+          case e: StreamingQueryException =>
+            Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+              .flatMap(t => Option(t.getMessage)).mkString("\n")
+        }
+      // wave 0 lands ids 0..2; wave 1 re-delivers id 0 next to a new id 3
+      rows.filter(col(idCol) < 3).write.parquet(s"$work/raw")
+      assert(run(s"$work/raw", s"$work/idx", "ckpt") == "", s"$name wave 0 failed")
+      rows.filter(col(idCol) === 0 || col(idCol) === 3)
+        .write.mode("append").parquet(s"$work/raw")
+      val redelivered = run(s"$work/raw", s"$work/idx", "ckpt")
+      assert(redelivered.contains("already ingested"),
+        s"$name must reject a re-delivered id: $redelivered")
+      flatSeed.foreach { seed =>
+        seed(rows.filter(col(idCol) < 3), s"$work/flat")
+        rows.filter(col(idCol) >= 3).write.parquet(s"$work/raw_flat")
+        val flat = run(s"$work/raw_flat", s"$work/flat", "ckpt_flat")
+        assert(flat.contains("is a flat index"),
+          s"$name must reject a flat seed index: $flat")
+      }
+    }
+  }
 }
