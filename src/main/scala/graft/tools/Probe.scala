@@ -21,8 +21,9 @@ object Probe {
 
   /** Per-stage accumulator printed by SPARK_GRAFT_PROBE_STAGES: one line
     * per completed stage in completion order. Wall = submission→completion
-    * (includes scheduling); exec = Σ task executorRunTime. */
-  private final class StageMetrics extends org.apache.spark.scheduler.SparkListener {
+    * (includes scheduling); exec = Σ task executorRunTime. A stage whose
+    * info carries no task metrics books zeros. */
+  private final class StageMetrics(spark: SparkSession) extends graft.core.JobLedger(spark) {
     case class Row(id: Int, name: String, tasks: Int, wallMs: Long,
       execMs: Long, shReadMb: Double, shWriteMb: Double, inMb: Double,
       spillMb: Double)
@@ -30,16 +31,21 @@ object Probe {
     override def onStageCompleted(
         sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
       val si = sc.stageInfo
-      val m = si.taskMetrics
+      if (isFenceStage(si.stageId)) return
+      val m = Option(si.taskMetrics)
+      def mb(f: org.apache.spark.executor.TaskMetrics => Long) = m.fold(0L)(f) / 1e6
       val wall = (for {s <- si.submissionTime; c <- si.completionTime}
         yield c - s).getOrElse(-1L)
       rows.add(Row(si.stageId, si.name.takeWhile(_ != '\n').take(80),
-        si.numTasks, wall, m.executorRunTime,
-        m.shuffleReadMetrics.totalBytesRead / 1e6,
-        m.shuffleWriteMetrics.bytesWritten / 1e6,
-        m.inputMetrics.bytesRead / 1e6, m.diskBytesSpilled / 1e6))
+        si.numTasks, wall, m.fold(0L)(_.executorRunTime),
+        mb(_.shuffleReadMetrics.totalBytesRead),
+        mb(_.shuffleWriteMetrics.bytesWritten),
+        mb(_.inputMetrics.bytesRead), mb(_.diskBytesSpilled)))
     }
+    /** Waits for the listener bus (a fence job, see JobLedger), then
+      * prints and clears the stages seen so far. */
     def drainAndPrint(): Unit = {
+      drain()
       println(f"${"stage"}%6s ${"tasks"}%5s ${"wall_s"}%8s ${"exec_s"}%8s " +
         f"${"shRd_MB"}%9s ${"shWr_MB"}%9s ${"in_MB"}%8s ${"spill"}%7s  name")
       var r = rows.poll()
@@ -77,18 +83,13 @@ object Probe {
     if (!sys.env.contains("SPARK_GRAFT_PROBE_NOPLAN"))
       fn(spark, dir).explain("formatted")
     val stages = if (sys.env.contains("SPARK_GRAFT_PROBE_STAGES"))
-      Some(new StageMetrics) else None
-    stages.foreach(spark.sparkContext.addSparkListener)
+      Some(new StageMetrics(spark)) else None
     (1 to reps).foreach { i =>
       spark.catalog.clearCache()
       val t0 = System.nanoTime
       val n = fn(spark, dir).collect().length
       println(f"rep $i: ${(System.nanoTime - t0) / 1e9}%.2fs ($n rows)")
-      stages.foreach { s =>
-        // listener events are posted asynchronously; let the bus drain
-        Thread.sleep(300)
-        s.drainAndPrint()
-      }
+      stages.foreach(_.drainAndPrint())
     }
     spark.stop()
   }

@@ -1,19 +1,61 @@
 package graft
 import org.apache.spark.sql.functions._
-import graft.core.{ChurnFixture, StageCache}
+import graft.analytics.ChurnAnalytics
+import graft.core.{ChurnFixture, JobLedger, StageCache}
 import graft.ingest.RestIngest
 import graft.streaming.Streaming
 import graft.warehouse.{Sinks, StarSchema}
 
 class SinksSpec extends SparkSpec {
   test("gold partitioned write + latest-partition read") {
-    val base = java.nio.file.Files.createTempDirectory("graft_gold").toString
+    import java.nio.file.{Files, Paths}
+    val base = Files.createTempDirectory("graft_gold").toString
     val df = ChurnFixture.df(spark, 50)
     Sinks.writeGold(df, base, "20260810")
     Sinks.writeGold(df.limit(20), base, "20260811", org.apache.spark.sql.SaveMode.Append)
+    // reference: read every partition, keep the newest dt
+    val before = spark.read.parquet(base).withColumn("dt", col("dt").cast("string"))
+      .filter(col("dt") === "20260811")
+    val uid = before.select("user_id").head().getString(0)
+    val ledger = new JobLedger(spark)
+    try {
+      val (latest, built) = ledger.jobs(Sinks.readLatestGold(spark, base))
+      assert(built == 0, "resolving the newest partition must start no Spark job")
+      assert(latest.schema == before.schema)
+      assert(latest.schema("dt").dataType == org.apache.spark.sql.types.StringType)
+      val (rows, scanned) = ledger.jobs(ChurnAnalytics.lookupUser(latest, uid).collect())
+      assert(scanned == 1, "one lookup must be one Spark job (the scan)")
+      assert(rows.length == 1 && rows(0).getAs[String]("dt") == "20260811")
+      assert(latest.inputFiles.nonEmpty && latest.inputFiles.forall(_.contains("/dt=20260811/")))
+      assert(latest.count() == 20)
+      assert(latest.collect().toSet == before.collect().toSet)
+    } finally ledger.close()
+
+    // newer dirs without a visible data file are writes in flight or
+    // leftovers, never the latest partition
+    val part = Files.list(Paths.get(base, "dt=20260811"))
+      .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get
+    val temp = Files.createDirectories(Paths.get(base, "dt=20260812", "_temporary", "0"))
+    Files.copy(part, temp.resolve(part.getFileName))
+    val hidden = Files.createDirectories(Paths.get(base, "dt=20260813"))
+    Files.createFile(hidden.resolve("_SUCCESS"))
+    Files.copy(part, hidden.resolve("." + part.getFileName))
+    Files.copy(part, hidden.resolve("_" + part.getFileName))
+    // an empty write creates no partition directory
+    Sinks.writeGold(df.limit(0), base, "20260814", org.apache.spark.sql.SaveMode.Append)
+    assert(!Files.exists(Paths.get(base, "dt=20260814")))
+    // an empty dt lands in the null partition, which max(dt) never picked
+    Sinks.writeGold(df.limit(5), base, "", org.apache.spark.sql.SaveMode.Append)
+    assert(Files.exists(Paths.get(base, "dt=__HIVE_DEFAULT_PARTITION__")))
     val latest = Sinks.readLatestGold(spark, base)
+    assert(latest.select("dt").distinct().collect().map(_.getString(0)).toSeq == Seq("20260811"))
     assert(latest.count() == 20)
-    assert(latest.select("dt").distinct().collect()(0).getString(0) == "20260811")
+
+    // a base with no data-bearing dt= dir fails and names the path
+    val bare = Files.createTempDirectory("graft_gold_bare").toString
+    Files.createFile(Files.createDirectories(Paths.get(bare, "dt=20260901")).resolve("_SUCCESS"))
+    val err = intercept[IllegalArgumentException](Sinks.readLatestGold(spark, bare))
+    assert(err.getMessage.contains(bare))
   }
 
   test("star schema: fact joins dims; broadcast plan on the dim side") {
