@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Timing harness over every SparkEntry query. Single-shot shared-JVM
   * timings on the vector queries swing 2×+ between identical runs (GC,
@@ -13,35 +12,13 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = graft.core.GraftSession.cores
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     // optional comma-separated name filter for focused A/B timing runs
     // (tools/bench_notes_* adjudications); the driver never sets it
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // bounded plan-description strings (see core.HostAnchor)
-      .config("spark.sql.maxPlanStringLength",
-        graft.core.HostAnchor.maxPlanStringLength)
-      // long-GC hardening, same rationale as ScaleCurve: a single-JVM
-      // measurement session must not RPC-self-destruct on a GC pause
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      // NO spark.speculation here (r16, ADVICE r15): under master=local[N]
-      // Spark's TaskSchedulerImpl only starts the speculation thread when
-      // !isLocal, so the r15 configs were a silent no-op — the q38
-      // improvement the r15 notes attributed to them was host variance.
-      // The real local-harness mitigations are min-of-reps here and
-      // min-of-2 + one targeted retry in ScaleCurve; ON A CLUSTER the
-      // submitter should still set spark.speculation=true (the bimodal
-      // stalled-tail class in bench_notes_r12/r14 is exactly what it
-      // re-launches) — it just cannot be A/B'd locally.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
     // ---- fixed-work calibration anchor (VERDICT r15 task 2; shared
     // with the funnel's budget gate — core.HostAnchor): timed at session
     // start so tools/bench_drift.py can compare anchor-NORMALIZED
@@ -52,7 +29,7 @@ object Bench {
     // anchor work would buy nothing (review r16).
     val anchor =
       if (only.isEmpty)
-        (1 to 3).map(_ => graft.core.HostAnchor.anchorOnce(spark, cpus.toInt)).min
+        (1 to 3).map(_ => graft.core.HostAnchor.anchorOnce(spark, cpus)).min
       else 0.0
     // `failed` marks a query whose fn threw on some rep: its time is
     // time-to-exception, meaningless for drift — it stays in the JSON
@@ -77,7 +54,7 @@ object Bench {
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
       if (only.isEmpty && sinceAnchor >= anchorEvery) {
-        segAnchor = graft.core.HostAnchor.anchorOnce(spark, cpus.toInt)
+        segAnchor = graft.core.HostAnchor.anchorOnce(spark, cpus)
         sinceAnchor = 0
         System.err.println(f"bench: segment anchor $segAnchor%.3f s " +
           f"(session-start anchor $anchor%.3f s)")

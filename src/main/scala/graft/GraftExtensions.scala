@@ -6,13 +6,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.SortedIntersectSize
 
 /** SparkSessionExtensions entry point: registers the engine's native
-  * functions AND optimizer rules at session build time, so any session
-  * started with
+  * functions at session build time, so any session started with
   *   --conf spark.sql.extensions=graft.GraftExtensions
-  * gets `sorted_intersect_size` / `dot_f32` in SQL scope and the
-  * [[graft.plans.BinnedRangeJoin]] range-join rewrite (armed by
-  * `spark.graft.rangeJoin.binWidth`) without per-session registration
-  * calls.
+  * (every [[graft.core.GraftSession]] session is) gets
+  * `sorted_intersect_size` / `dot_f32` in SQL scope without
+  * per-session registration calls.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -24,6 +22,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("dot_f32"),
       new ExpressionInfo(classOf[graft.functions.DotProductF32].getName, "dot_f32"),
       (exprs: Seq[Expression]) => graft.functions.DotProductF32(exprs(0), exprs(1))))
-    ext.injectOptimizerRule(_ => graft.plans.BinnedRangeJoin)
   }
 }

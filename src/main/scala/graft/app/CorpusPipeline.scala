@@ -1,6 +1,6 @@
 package graft.app
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
@@ -31,25 +31,11 @@ object CorpusPipeline {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val work = args.lift(1).getOrElse("/tmp/graft_corpus_pipeline")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-corpus-pipeline")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // bounded plan-description strings (core.HostAnchor): the funnel's
-      // late stages carry fifteen stages of lineage, and the unbounded
-      // default let ONE SQLExecutionStart's explainString burn 4+ min of
-      // driver CPU and 5 GiB of heap rendering a string nobody reads
-      // (diagnosed r16 on the stage-6b drift query's plan)
-      .config("spark.sql.maxPlanStringLength",
-        graft.core.HostAnchor.maxPlanStringLength)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
     // host-calibration anchor BEFORE t0: the budget gate below compares
     // wall/anchor, so the anchor is not billed to the funnel itself
     val anchorSec = graft.core.HostAnchor.anchorOnce(spark,
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
+      graft.core.GraftSession.cores)
     val t0 = System.nanoTime()
 
     // ---- per-stage wall-time ledger (VERDICT r14 task 6): attribution

@@ -1,6 +1,5 @@
 package graft.app
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Plan audit: prints the formatted physical plan for selected queries and
@@ -25,17 +24,7 @@ object ExplainAudit {
       "q111_copurchase_pairs", "q167_km_survival", "q171_kmeans_segments",
       "q173_seq_patterns", "q174_logreg_gd", "q176_join_key_skew",
       "q183_bootstrap_ci", "q184_seq_patterns3")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // bounded plan-description strings (see core.HostAnchor)
-      .config("spark.sql.maxPlanStringLength",
-        graft.core.HostAnchor.maxPlanStringLength)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.GraftSession.local()
 
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, dir)

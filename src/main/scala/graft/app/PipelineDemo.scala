@@ -1,6 +1,5 @@
 package graft.app
 
-import org.apache.spark.sql.SparkSession
 import graft.core.ChurnFixture
 
 /** Runnable end-to-end demo of the churn pipeline: generates a churn-shaped
@@ -14,17 +13,7 @@ object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(5000)
     val work = args.lift(1).getOrElse("/tmp/graft_pipeline_demo")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-pipeline-demo")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // bounded plan-description strings (see core.HostAnchor)
-      .config("spark.sql.maxPlanStringLength",
-        graft.core.HostAnchor.maxPlanStringLength)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
 
     val csvDir = s"$work/raw_csv"
     ChurnFixture.df(spark, n).write.mode("overwrite").option("header", "true").csv(csvDir)

@@ -1,6 +1,6 @@
 package graft.app
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.TextDedup
 
@@ -44,34 +44,9 @@ import graft.ops.TextDedup
 object ScaleCurve {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.core.GraftSession.cores
     val slack = args.headOption.map(_.toDouble).getOrElse(1.8)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-curve")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // bounded plan-description strings (see core.HostAnchor)
-      .config("spark.sql.maxPlanStringLength",
-        graft.core.HostAnchor.maxPlanStringLength)
-      // long-GC hardening (r16): with a 64g heap and a bursty host, a
-      // stop-the-world pause can outlive the default heartbeat budget,
-      // and in local mode the "executor" then declares ITS OWN driver
-      // dead — an RPC self-destruct observed killing a mid-curve session
-      // (exit 56). A single-JVM harness has nothing to gain from tight
-      // liveness probes.
-      .config("spark.executor.heartbeatInterval", "60s")
-      .config("spark.network.timeout", "600s")
-      // NO spark.speculation (r16, ADVICE r15): it is a silent no-op
-      // under local[N] — TaskSchedulerImpl starts the speculation thread
-      // only when !isLocal — so the r15 A/B "improvement" was host
-      // variance. The mitigations that actually run in this harness are
-      // min-of-2 per cell plus the ONE targeted retry below; a real
-      // cluster submission should enable speculation (quantile 0.75 /
-      // multiplier 2.0) for the same bimodal stalled-tail class.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
 
     val work = java.nio.file.Files.createTempDirectory("graft_scale").toString
     val scales = Seq(1, 4, 16)
@@ -404,7 +379,7 @@ object ScaleCurve {
       if (!onlyCells.forall(_.exists(name.startsWith))) return
       def timesOnce(): Seq[Double] = scales.map { k =>
         // constant rows per shuffle partition across scales — see scaladoc
-        spark.conf.set("spark.sql.shuffle.partitions", (cpus.toInt * k).toString)
+        spark.conf.set("spark.sql.shuffle.partitions", (cpus * k).toString)
         val runs = (1 to 2).map { _ =>
           val t0 = System.nanoTime()
           f(at(k))

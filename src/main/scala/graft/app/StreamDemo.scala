@@ -1,6 +1,5 @@
 package graft.app
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.core.ChurnFixture
 import graft.streaming.Streaming
@@ -18,17 +17,7 @@ object StreamDemo {
     val perWave = args.headOption.map(_.toInt).getOrElse(2000)
     val waves = args.lift(1).map(_.toInt).getOrElse(3)
     val work = java.nio.file.Files.createTempDirectory("graft_stream_demo").toString
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-stream-demo")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // bounded plan-description strings (see core.HostAnchor)
-      .config("spark.sql.maxPlanStringLength",
-        graft.core.HostAnchor.maxPlanStringLength)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
 
     val raw = s"$work/raw"; val silver = s"$work/silver"; val ckpt = s"$work/ckpt"
 

@@ -39,17 +39,7 @@ object WarehouseDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val work = java.nio.file.Files.createTempDirectory("graft_wh_demo").toString
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-warehouse-demo")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // bounded plan-description strings (see core.HostAnchor)
-      .config("spark.sql.maxPlanStringLength",
-        graft.core.HostAnchor.maxPlanStringLength)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
     val ok = run(spark, sfDir, work, GateNotifier(
       onSuccess = s => println(s),
       onFailure = (g, m) => println(s"GATE FAILED [$g]: $m")))

@@ -114,10 +114,4 @@ object SortedIntersectSize {
       SortedIntersectSize(
         org.apache.spark.sql.GraftShim.expression(a),
         org.apache.spark.sql.GraftShim.expression(b)))
-
-  /** SQL registration: `SELECT sorted_intersect_size(a, b)`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_size",
-      exprs => SortedIntersectSize(exprs(0), exprs(1)), "scala_udf")
 }

@@ -40,9 +40,8 @@ object RangeJoin {
   /** Reserved temp column carrying the bin id through the equi-join. */
   private val BinCol = "_bin"
 
-  /** `floorDiv(c, w)` in exact long arithmetic — the same shape as
-    * [[graft.plans.BinnedRangeJoin.bin]]: `pmod` is non-negative, so
-    * `c - pmod(c, w)` is the floor multiple and the integral divide is
+  /** `floorDiv(c, w)` in exact long arithmetic: `pmod` is non-negative,
+    * so `c - pmod(c, w)` is the floor multiple and the integral divide is
     * exact. Spark's `floor(c / w)` would divide as doubles, collapsing
     * adjacent bins above 2^53 (one bucket per 512 values at 2^62 —
     * needless fan-out and candidate skew at extreme magnitudes).

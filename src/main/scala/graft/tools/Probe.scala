@@ -11,8 +11,9 @@ import org.apache.spark.sql.SparkSession
   * Usage:
   *   tools/run.sh graft.tools.Probe <queryName> [sfDir] [reps]
   *
-  * Env: SPARK_GRAFT_CPUS (default 8), SPARK_GRAFT_PROBE_NOPLAN=1 to
-  * skip the explain (pure timing run), SPARK_GRAFT_PROBE_STAGES=1 to
+  * Env: SPARK_GRAFT_CPUS (default: every core the JVM sees, the
+  * `core.GraftSession` rule), SPARK_GRAFT_PROBE_NOPLAN=1 to skip the
+  * explain (pure timing run), SPARK_GRAFT_PROBE_STAGES=1 to
   * print per-stage metrics (wall, executor time, shuffle bytes, spill)
   * after each rep — the Spark-UI stage table for a headless box, the
   * guide-§1 "decide whether the time is shuffle read or compute" loop.
@@ -66,17 +67,7 @@ object Probe {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // bounded plan-description strings (see core.HostAnchor)
-      .config("spark.sql.maxPlanStringLength",
-        graft.core.HostAnchor.maxPlanStringLength)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local()
     val fn = graft.SparkEntry.queries.getOrElse(name,
       throw new IllegalArgumentException(
         s"unknown query '$name'; names: ${graft.SparkEntry.queries.keys.toSeq.sorted.take(8).mkString(", ")}…"))

@@ -73,13 +73,17 @@ class ConfigSpec extends SparkSpec {
 
 class ExtensionsSpec extends SparkSpec {
   test("extensions-injected function resolves in SQL") {
-    // apply the injection to the live session's registry via the same
-    // builder the extension uses
-    graft.functions.SortedIntersectSize.register(spark)
     val got = spark.sql(
       "SELECT sorted_intersect_size(array('a','b','c'), array('b','c','d'))")
       .collect()(0).getInt(0)
     assert(got == 2)
+  }
+
+  test("SQL-registered kernels resolve through the extension") {
+    val r = spark.sql(
+      "SELECT dot_f32(array(cast(1.0 as float), cast(2.0 as float)), " +
+        "array(cast(3.0 as float), cast(4.0 as float))) AS d").collect()(0)
+    assert(math.abs(r.getDouble(0) - 11.0) < 1e-9)
   }
 }
 

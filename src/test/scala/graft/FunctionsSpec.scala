@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.SortedIntersectSize
 import graft.functions.SortedIntersectSize.sortedIntersectSize
 
 class FunctionsSpec extends SparkSpec {
@@ -40,7 +39,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("SQL registration works") {
-    SortedIntersectSize.register(spark)
     pairs.createOrReplaceTempView("pairs_sis")
     val got = spark.sql("SELECT sorted_intersect_size(a, b) FROM pairs_sis")
       .collect().map(_.getInt(0)).toSeq

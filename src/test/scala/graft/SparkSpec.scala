@@ -12,17 +12,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // bounded plan-description strings (see core.HostAnchor)
-      .config("spark.sql.maxPlanStringLength",
-        graft.core.HostAnchor.maxPlanStringLength)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
+    val s = graft.core.GraftSession.local(cores = 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

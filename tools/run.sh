@@ -21,5 +21,4 @@ done
 # full suite's JIT output without flushing (VERDICT r12 task 2).
 exec java $ADD_OPENS -Xmx${SPARK_DRIVER_MEM:-16g} \
   -XX:ReservedCodeCacheSize=1g \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$JAR:/opt/spark/jars/*" "$@"
