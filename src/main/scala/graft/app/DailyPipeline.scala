@@ -8,18 +8,22 @@ import graft.ingest.CsvIngest
 import graft.normalize.ZScore
 import graft.quality.QualityAudit
 import graft.validate.SchemaValidator
+import scala.collection.immutable.ListMap
 
 /** The reference's daily Airflow DAG as ONE Spark application (SURVEY §3.1):
-  * ingest → validate(warn) → quality report → clean → features → normalize
-  * → metadata → Silver. Each stage is a pure DataFrame => DataFrame; the
-  * whole chain is one lazy plan — only the stat-dependent steps (medians,
-  * quantile fences, q80, z-score fit, encoder levels) force small agg jobs
-  * whose scalars re-enter the plan as literals.
+  * ingest + validation gate → quality report → clean → features →
+  * normalize → metadata → Silver. Each stage is a pure DataFrame =>
+  * DataFrame; only the stat-dependent steps (medians, quantile fences, q80,
+  * encoder levels, z-score fit) force small jobs whose scalars re-enter the
+  * plan as literals.
   *
   * Where the reference materializes ~6 full pandas copies
-  * (etl_pipeline.py:84-128 `df.copy()` per stage), Spark materializes
-  * nothing until the Silver write, and the quality/validation reports
-  * share the cached cleaned frame.
+  * (etl_pipeline.py:84-128 `df.copy()` per stage), `run` caches two
+  * frames: Bronze, which the quality audit and the transform both read,
+  * and Silver, which is counted and then written. Both are released
+  * before `run` returns. The ingest gate's report is the run's validation
+  * report: the gate throws on any invalid row, so validating Bronze again
+  * could only repeat it.
   */
 object DailyPipeline {
 
@@ -44,12 +48,15 @@ object DailyPipeline {
       onSuccess: RunReport => Unit = _ => (),
       onFailure: (String, Throwable) => Unit = (_, _) => ())
 
+  private def withProcessingMeta(df: DataFrame): DataFrame =
+    df.withColumns(ListMap(
+      "_processing_timestamp" -> current_timestamp(),
+      "_processing_version" -> lit("1.0.0")))
+
   def transform(df: DataFrame, exact: Boolean = true): DataFrame = {
     val cleaned = Cleaning.clean(df, exact = exact)
     val featured = Features.engineer(cleaned, exact = exact)
-    ZScore.fitTransform(featured)
-      .withColumn("_processing_timestamp", current_timestamp())
-      .withColumn("_processing_version", lit("1.0.0"))
+    withProcessingMeta(ZScore.fitTransform(featured))
   }
 
   /** `transform` with the reference's feature-stage caching
@@ -66,9 +73,7 @@ object DailyPipeline {
     val featured = graft.core.StageCache.cached(spark, cacheBase, key, ttlMillis) {
       Features.engineer(Cleaning.clean(df, exact = exact), exact = exact)
     }
-    ZScore.fitTransform(featured)
-      .withColumn("_processing_timestamp", current_timestamp())
-      .withColumn("_processing_version", lit("1.0.0"))
+    withProcessingMeta(ZScore.fitTransform(featured))
   }
 
   /** End-to-end run. `silverPath` gets a snappy parquet of the processed
@@ -83,26 +88,25 @@ object DailyPipeline {
       notify: Notifier = Notifier()): RunReport = {
     var stage = "ingest"
     try {
-      val bronze = CsvIngest.ingest(spark, csvPath, bronzePath)
+      val (bronze, validation) = CsvIngest.ingestValidated(spark, csvPath, bronzePath)
       bronze.persist()
       try {
-        stage = "validate"
-        val validation = SchemaValidator.validate(bronze)
         stage = "quality"
         val quality = QualityAudit.audit(bronze.drop("_violations"))
         stage = "transform"
-        val silver = transform(bronze)
-        silver.persist()
-        val rows = silver.count()
-        stage = "publish"
-        silverPath.foreach { p =>
-          silver.write.mode("overwrite").option("compression", "snappy").parquet(p)
-        }
-        val report = RunReport(validation, quality, rows, silver.columns.length,
-          columnsAdded = (silver.columns.toSet -- bronze.columns.toSet).toSeq.sorted,
-          columnsRemoved = (bronze.columns.toSet -- silver.columns.toSet).toSeq.sorted)
-        notify.onSuccess(report)
-        report
+        val silver = transform(bronze, exact).persist()
+        try {
+          val rows = silver.count()
+          stage = "publish"
+          silverPath.foreach { p =>
+            silver.write.mode("overwrite").option("compression", "snappy").parquet(p)
+          }
+          val report = RunReport(validation, quality, rows, silver.columns.length,
+            columnsAdded = (silver.columns.toSet -- bronze.columns.toSet).toSeq.sorted,
+            columnsRemoved = (bronze.columns.toSet -- silver.columns.toSet).toSeq.sorted)
+          notify.onSuccess(report)
+          report
+        } finally silver.unpersist()
       } finally bronze.unpersist()
     } catch {
       case scala.util.control.NonFatal(e) => notify.onFailure(stage, e); throw e

@@ -134,8 +134,8 @@ object Cleaning {
       "user_id" -> "string",
       "churn_label" -> "int",
       "app_version_major" -> "string")
-    wanted.filter { case (c, _) => df.columns.contains(c) }
-      .foldLeft(df) { case (d, (c, t)) => d.withColumn(c, col(c).cast(t)) }
+    // each cast replaces its column in place
+    df.withColumns(wanted.collect { case (c, t) if df.columns.contains(c) => c -> col(c).cast(t) })
   }
 
   /** Full cleaning stage in reference order. The dedup step here skips

@@ -3,17 +3,21 @@ package graft.features
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import scala.collection.immutable.ListMap
 
 /** Feature engineering (SURVEY §2.7 F1-F15, §2.5 W1), mirroring the
   * reference's six blocks in order (reference:
   * src/processing/feature_engineering.py:27-263): rfm → behavioral →
   * temporal → interaction → domain → encode.
   *
-  * Everything is column arithmetic inside one projection chain — Catalyst
-  * collapses the ~40 withColumns into a few codegen'd projects. The only
-  * aggregation-dependent steps (quintile edges, q80 thresholds, distinct
-  * category levels) run as separate small jobs whose scalars re-enter the
-  * plan as literals (the fit/transform split, SURVEY §4.1).
+  * Each block adds its columns with ONE ordered `withColumns` projection
+  * (and `encode` with one per encoder), so the analyzer sees six
+  * projections, not one per new column: a chained `withColumn` re-analyzes
+  * the whole 180+-column plan every call, which made the driver, not the
+  * rows, the cost of this stage. The only aggregation-dependent steps
+  * (quintile edges, q80 thresholds, distinct category levels) run as
+  * separate small jobs whose scalars re-enter the plan as literals (the
+  * fit/transform split, SURVEY §4.1).
   */
 object Features {
 
@@ -110,48 +114,48 @@ object Features {
       ascending = true, Some(dc.getAs[Long]("f")), exact)
     val m = quantileBucket(df, "rfm_monetary", tiebreak, 5, Seq(1, 2, 3, 4, 5),
       ascending = true, Some(dc.getAs[Long]("m")), exact)
-    df.withColumn("rfm_segment",
-        concat(r.cast("string"), f.cast("string"), m.cast("string")))
-      .withColumn("rfm_score",
-        col("rfm_recency") * 0.4 + col("rfm_frequency") * 0.3 + col("rfm_monetary") * 0.3)
-      .withColumn("rfm_category",
-        cut(col("rfm_score"), Seq(0, 25, 50, 75, 100), Seq("Low", "Medium", "High", "Very High")))
+    val score = col("rfm_recency") * 0.4 + col("rfm_frequency") * 0.3 + col("rfm_monetary") * 0.3
+    df.withColumns(ListMap(
+      "rfm_segment" -> concat(r.cast("string"), f.cast("string"), m.cast("string")),
+      "rfm_score" -> score,
+      "rfm_category" ->
+        cut(score, Seq(0, 25, 50, 75, 100), Seq("Low", "Medium", "High", "Very High"))))
   }
 
   /** Block 2 — behavioral (reference :100-134). */
   def behavioral(df: DataFrame): DataFrame =
-    df.withColumn("session_intensity_30d", col("sessions_30d") / 30)
-      .withColumn("session_intensity_90d", col("sessions_90d") / 90)
-      .withColumn("engagement_ratio", zeroGuardDiv(col("sessions_30d"), col("sessions_90d")))
-      .withColumn("search_activity_ratio",
-        zeroGuardDiv(col("search_queries_30d"), col("sessions_30d")))
-      .withColumn("pages_per_session_30d",
-        col("median_pages_viewed_30d") * col("sessions_30d"))
-      .withColumn("email_engagement_score",
-        col("emails_open_rate_90d") * 0.6 + col("emails_click_rate_90d") * 0.4)
-      .withColumn("support_intensity",
-        zeroGuardDiv(col("support_tickets_2024"), col("orders_2024")))
+    df.withColumns(ListMap(
+      "session_intensity_30d" -> col("sessions_30d") / 30,
+      "session_intensity_90d" -> col("sessions_90d") / 90,
+      "engagement_ratio" -> zeroGuardDiv(col("sessions_30d"), col("sessions_90d")),
+      "search_activity_ratio" -> zeroGuardDiv(col("search_queries_30d"), col("sessions_30d")),
+      "pages_per_session_30d" -> col("median_pages_viewed_30d") * col("sessions_30d"),
+      "email_engagement_score" ->
+        (col("emails_open_rate_90d") * 0.6 + col("emails_click_rate_90d") * 0.4),
+      "support_intensity" -> zeroGuardDiv(col("support_tickets_2024"), col("orders_2024"))))
 
   /** Block 3 — temporal (reference :136-162). */
   def temporal(df: DataFrame): DataFrame =
-    df.withColumn("reg_recency_category",
+    df.withColumns(ListMap(
+      "reg_recency_category" ->
         cut(col("reg_days"), Seq(0, 30, 90, 365, 1000, Double.PositiveInfinity),
-          Seq("New", "Recent", "Established", "Long-term", "Veteran")))
-      .withColumn("last_order_category",
+          Seq("New", "Recent", "Established", "Long-term", "Veteran")),
+      "last_order_category" ->
         cut(col("days_since_last_order"), Seq(0, 7, 30, 90, 180, Double.PositiveInfinity),
-          Seq("Very Recent", "Recent", "Moderate", "Old", "Very Old")))
-      .withColumn("order_frequency_2024", col("orders_2024") / 365)
-      .withColumn("is_weekend_reg", pmod(col("reg_days"), lit(7)).isin(5, 6))
-      .withColumn("is_month_end", pmod(col("reg_days"), lit(30)) >= 25)
+          Seq("Very Recent", "Recent", "Moderate", "Old", "Very Old")),
+      "order_frequency_2024" -> col("orders_2024") / 365,
+      "is_weekend_reg" -> pmod(col("reg_days"), lit(7)).isin(5, 6),
+      "is_month_end" -> (pmod(col("reg_days"), lit(30)) >= 25)))
 
   /** Block 4 — interaction (reference :164-198). */
   def interaction(df: DataFrame): DataFrame =
-    df.withColumn("value_per_session", zeroGuardDiv(col("gmv_2024"), col("sessions_90d")))
-      .withColumn("order_efficiency", zeroGuardDiv(col("orders_90d"), col("sessions_90d")))
-      .withColumn("discount_sensitivity", col("discount_rate_2024") * col("orders_2024"))
-      .withColumn("quality_score", col("avg_csat_2024") * col("avg_review_stars_2024"))
-      .withColumn("risk_score", col("refund_rate_2024") * col("support_tickets_2024"))
-      .withColumn("engagement_value", col("sessions_90d") * col("aov_2024"))
+    df.withColumns(ListMap(
+      "value_per_session" -> zeroGuardDiv(col("gmv_2024"), col("sessions_90d")),
+      "order_efficiency" -> zeroGuardDiv(col("orders_90d"), col("sessions_90d")),
+      "discount_sensitivity" -> col("discount_rate_2024") * col("orders_2024"),
+      "quality_score" -> col("avg_csat_2024") * col("avg_review_stars_2024"),
+      "risk_score" -> col("refund_rate_2024") * col("support_tickets_2024"),
+      "engagement_value" -> col("sessions_90d") * col("aov_2024")))
 
   /** Block 5 — domain (reference :200-238). q80 thresholds are one small
     * agg job broadcast back as literals.
@@ -163,20 +167,17 @@ object Features {
       expr(s"$pct(aov_2024, 0.8)").cast("double").as("aov_q80")).collect()(0)
     val gmvQ80 = q80row.getAs[Double]("gmv_q80")
     val aovQ80 = q80row.getAs[Double]("aov_q80")
-    df.withColumn("clv_proxy",
-        col("gmv_2024") * (lit(365) / when(col("reg_days") === 0, 1).otherwise(col("reg_days"))))
-      .withColumn("purchase_consistency",
-        zeroGuardDiv(col("orders_2024"), col("reg_days") / 30))
-      .withColumn("diversity_score",
-        zeroGuardDiv(col("category_diversity_2024"), col("orders_2024")))
+    df.withColumns(ListMap(
+      "clv_proxy" ->
+        col("gmv_2024") * (lit(365) / when(col("reg_days") === 0, 1).otherwise(col("reg_days"))),
+      "purchase_consistency" -> zeroGuardDiv(col("orders_2024"), col("reg_days") / 30),
+      "diversity_score" -> zeroGuardDiv(col("category_diversity_2024"), col("orders_2024")),
       // regex-by-default str.contains parity: '.' matches any char (F5)
-      .withColumn("is_latest_version", col("app_version_major").rlike("3.x"))
-      .withColumn("is_mobile_heavy", col("device_mix_ratio") > 0.7)
-      .withColumn("is_high_value",
-        col("gmv_2024") > gmvQ80 || col("aov_2024") > aovQ80)
-      .withColumn("is_at_risk",
-        col("days_since_last_order") > 90 || col("sessions_30d") === 0 ||
-          col("refund_rate_2024") > 0.1)
+      "is_latest_version" -> col("app_version_major").rlike("3.x"),
+      "is_mobile_heavy" -> (col("device_mix_ratio") > 0.7),
+      "is_high_value" -> (col("gmv_2024") > gmvQ80 || col("aov_2024") > aovQ80),
+      "is_at_risk" -> (col("days_since_last_order") > 90 || col("sessions_30d") === 0 ||
+        col("refund_rate_2024") > 0.1)))
   }
 
   /** Default categorical encoding config (reference config.yaml
@@ -202,6 +203,38 @@ object Features {
       .map(_.getString(1)).toSeq.sorted).toMap
   }
 
+  /** Sorted-level when-chain: the LabelEncoder code of `c`'s value, with
+    * null read as the "nan" level.
+    */
+  private def labelCode(c: String, levels: Seq[String]): Column =
+    levels.zipWithIndex.foldLeft(lit(null).cast("int")) { case (acc, (v, i)) =>
+      when(coalesce(col(c).cast("string"), lit("nan")) === v, i).otherwise(acc)
+    }
+
+  /** `<c>_encoded` for every column in one projection, then the originals
+    * dropped: each code lands at the end, in `cols` order.
+    */
+  private def withLabelCodes(
+      df: DataFrame, cols: Seq[String], levels: Map[String, Seq[String]]): DataFrame =
+    df.withColumns(ListMap.from(cols.map(c => s"${c}_encoded" -> labelCode(c, levels(c)))))
+      .drop(cols: _*)
+
+  /** One `(c === v).cast(int)` dummy per non-"nan" level of every column,
+    * in one projection, then the originals dropped. Level values are
+    * sanitized: dots/spaces in generated column names break every
+    * dotted-path resolver downstream (na.fill, VectorAssembler) —
+    * divergence from pandas' verbatim names, documented. When two levels
+    * sanitize to the same name the later level's dummy wins, at the
+    * first one's position.
+    */
+  private def withDummies(
+      df: DataFrame, cols: Seq[String], levels: Map[String, Seq[String]]): DataFrame = {
+    val dummies = cols.flatMap(c => levels(c).filterNot(_ == "nan").map { v =>
+      s"${c}_${v.replaceAll("[^A-Za-z0-9_]", "_")}" -> (col(c) === v).cast("int")
+    })
+    df.withColumns(ListMap.from(dummies)).drop(cols: _*)
+  }
+
   /** F14 ordinal encode with sklearn LabelEncoder parity: codes assigned by
     * lexicographic order of the distinct string values, nulls encoded as
     * the literal "nan" bucket like `astype(str)` turns NaN into "nan".
@@ -210,14 +243,7 @@ object Features {
     */
   def labelEncode(df: DataFrame, cols: Seq[String]): DataFrame = {
     val present = cols.filter(df.columns.contains)
-    val levels = distinctLevels(df, present)
-    present.foldLeft(df) { (d, c) =>
-      val enc = levels(c).zipWithIndex.foldLeft(lit(null).cast("int")) {
-        case (acc, (v, i)) =>
-          when(coalesce(col(c).cast("string"), lit("nan")) === v, i).otherwise(acc)
-      }
-      d.withColumn(s"${c}_encoded", enc).drop(c)
-    }
+    withLabelCodes(df, present, distinctLevels(df, present))
   }
 
   /** F13 one-hot encode, keep-all-levels variant (features path): level
@@ -227,18 +253,7 @@ object Features {
     */
   def oneHotEncode(df: DataFrame, cols: Seq[String]): DataFrame = {
     val present = cols.filter(df.columns.contains)
-    val levels = distinctLevels(df, present)
-    present.foldLeft(df) { (d, c) =>
-      val withDummies = levels(c).filterNot(_ == "nan").foldLeft(d) { (dd, v) =>
-        // sanitize level values: dots/spaces in generated column names
-        // break every dotted-path resolver downstream (na.fill,
-        // VectorAssembler) — divergence from pandas' verbatim names,
-        // documented
-        val safe = v.replaceAll("[^A-Za-z0-9_]", "_")
-        dd.withColumn(s"${c}_$safe", (col(c) === v).cast("int"))
-      }
-      withDummies.drop(c)
-    }
+    withDummies(df, present, distinctLevels(df, present))
   }
 
   /** Block 6 — encode (reference :240-263). Level discovery for ordinal
@@ -246,21 +261,10 @@ object Features {
     * touch disjoint columns, so both can read from the pre-encode frame).
     */
   def encode(df: DataFrame): DataFrame = {
-    val present = (ordinalCols ++ nominalCols).filter(df.columns.contains)
-    val levels = distinctLevels(df, present)
-    val labeled = ordinalCols.filter(df.columns.contains).foldLeft(df) { (d, c) =>
-      val enc = levels(c).zipWithIndex.foldLeft(lit(null).cast("int")) {
-        case (acc, (v, i)) =>
-          when(coalesce(col(c).cast("string"), lit("nan")) === v, i).otherwise(acc)
-      }
-      d.withColumn(s"${c}_encoded", enc).drop(c)
-    }
-    nominalCols.filter(labeled.columns.contains).foldLeft(labeled) { (d, c) =>
-      levels(c).filterNot(_ == "nan").foldLeft(d) { (dd, v) =>
-        val safe = v.replaceAll("[^A-Za-z0-9_]", "_")
-        dd.withColumn(s"${c}_$safe", (col(c) === v).cast("int"))
-      }.drop(c)
-    }
+    val ordinal = ordinalCols.filter(df.columns.contains)
+    val nominal = nominalCols.filter(df.columns.contains)
+    val levels = distinctLevels(df, ordinal ++ nominal)
+    withDummies(withLabelCodes(df, ordinal, levels), nominal, levels)
   }
 
   /** Full feature stage in reference order (adds ~30 scalar features, then

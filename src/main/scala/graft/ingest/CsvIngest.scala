@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.StructType
+import scala.collection.immutable.ListMap
 import graft.core.ChurnSchema
 import graft.validate.SchemaValidator
 
@@ -38,16 +39,17 @@ object CsvIngest {
     else base.schema(schema).csv(path)
   }
 
-  def withLineage(df: DataFrame, globalSeq: Boolean = false): DataFrame = {
-    val withMeta = df
-      .withColumn("_ingestion_timestamp", current_timestamp())
-      .withColumn("_source_file", input_file_name())
-    if (globalSeq)
-      withMeta.withColumn("_row_number",
-        row_number().over(Window.orderBy(monotonically_increasing_id())) - 1)
-    else
-      withMeta.withColumn("_row_number", monotonically_increasing_id())
-  }
+  /** The three lineage columns in one projection. With `globalSeq` the
+    * analyzer still evaluates `input_file_name()` below the window's
+    * exchange, where the scanned file is known.
+    */
+  def withLineage(df: DataFrame, globalSeq: Boolean = false): DataFrame =
+    df.withColumns(ListMap(
+      "_ingestion_timestamp" -> current_timestamp(),
+      "_source_file" -> input_file_name(),
+      "_row_number" ->
+        (if (globalSeq) row_number().over(Window.orderBy(monotonically_increasing_id())) - 1
+        else monotonically_increasing_id())))
 
   /** Full ingest: read → hard validation gate → lineage → Bronze parquet.
     * Returns the validated frame (also written if `bronzePath` given).
@@ -56,13 +58,24 @@ object CsvIngest {
       spark: SparkSession,
       csvPath: String,
       bronzePath: Option[String] = None,
-      globalSeq: Boolean = false): DataFrame = {
+      globalSeq: Boolean = false): DataFrame =
+    ingestValidated(spark, csvPath, bronzePath, globalSeq)._1
+
+  /** [[ingest]] that also returns the gate's report. The gate throws on
+    * any invalid row, so the report is the whole validation of the day's
+    * input: a caller needs no second validation pass over Bronze.
+    */
+  def ingestValidated(
+      spark: SparkSession,
+      csvPath: String,
+      bronzePath: Option[String] = None,
+      globalSeq: Boolean = false): (DataFrame, SchemaValidator.ValidationReport) = {
     val raw = readCsv(spark, csvPath)
-    SchemaValidator.validateOrThrow(raw)
+    val report = SchemaValidator.validateOrThrow(raw)
     val bronze = withLineage(raw, globalSeq)
     bronzePath.foreach { p =>
       bronze.write.mode("overwrite").option("compression", "snappy").parquet(p)
     }
-    bronze
+    (bronze, report)
   }
 }

@@ -8,6 +8,7 @@ import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.NumericType
+import scala.collection.immutable.ListMap
 
 /** ML stage (SURVEY §2.10 M1-M10) as a spark.ml Pipeline.
   *
@@ -82,19 +83,22 @@ object ChurnModel {
     new Pipeline().setStages(Array(assembler, clf))
   }
 
-  /** M4: accuracy / weighted P-R-F1 / ROC-AUC on a scored frame. */
+  /** M4: accuracy / weighted P-R-F1 / ROC-AUC on a scored frame. The four
+    * multiclass metrics come from ONE confusion pass
+    * (`MulticlassClassificationEvaluator.getMetrics`, the same
+    * `MulticlassMetrics` each evaluator call builds), then one AUC pass.
+    */
   def evaluate(scored: DataFrame, labelCol: String = "churn_label"): Metrics = {
-    // five evaluator passes read the same scored frame — materialize once
+    // two metric passes read the same scored frame — materialize once
     val cached = scored.select(labelCol, "prediction", "rawPrediction").persist()
     try {
-      def mc(metric: String) = new MulticlassClassificationEvaluator()
-        .setLabelCol(labelCol).setPredictionCol("prediction")
-        .setMetricName(metric).evaluate(cached)
+      val mc = new MulticlassClassificationEvaluator()
+        .setLabelCol(labelCol).setPredictionCol("prediction").getMetrics(cached)
       val auc = new BinaryClassificationEvaluator()
         .setLabelCol(labelCol).setRawPredictionCol("rawPrediction")
         .setMetricName("areaUnderROC").evaluate(cached)
-      Metrics(mc("accuracy"), mc("weightedPrecision"), mc("weightedRecall"),
-        mc("f1"), auc)
+      Metrics(mc.accuracy, mc.weightedPrecision, mc.weightedRecall,
+        mc.weightedFMeasure, auc)
     } finally { cached.unpersist(); () }
   }
 
@@ -270,9 +274,10 @@ object ChurnModel {
   /** M9: batch scoring with churn probability and confidence=max(proba). */
   def score(model: PipelineModel, df: DataFrame): DataFrame =
     model.transform(df)
-      .withColumn("churn_probability", element_at(vector_to_array(col("probability")), 2))
-      .withColumn("confidence", array_max(vector_to_array(col("probability"))))
-      .withColumn("churn_prediction", col("prediction").cast("int"))
+      .withColumns(ListMap(
+        "churn_probability" -> element_at(vector_to_array(col("probability")), 2),
+        "confidence" -> array_max(vector_to_array(col("probability"))),
+        "churn_prediction" -> col("prediction").cast("int")))
       .drop("features", "rawPrediction", "probability", "prediction")
 
   /** M8: persistence — PipelineModel bundles stages + feature metadata. */

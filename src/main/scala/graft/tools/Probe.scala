@@ -23,12 +23,24 @@ object Probe {
   /** Per-stage accumulator printed by SPARK_GRAFT_PROBE_STAGES: one line
     * per completed stage in completion order. Wall = submission→completion
     * (includes scheduling); exec = Σ task executorRunTime. A stage whose
-    * info carries no task metrics books zeros. */
+    * info carries no task metrics books zeros. `job` and `exec` are the
+    * stage's job id and `spark.sql.execution.id` (-1 outside SQL), booked
+    * at job start: under AQE most stages are named after the thread-pool
+    * frame that submitted them, and these two say which query and which
+    * of its jobs ran the stage. */
   private final class StageMetrics(spark: SparkSession) extends graft.core.JobLedger(spark) {
-    case class Row(id: Int, name: String, tasks: Int, wallMs: Long,
+    case class Row(id: Int, job: Int, exec: Long, name: String, tasks: Int, wallMs: Long,
       execMs: Long, shReadMb: Double, shWriteMb: Double, inMb: Double,
       spillMb: Double)
     val rows = new java.util.concurrent.ConcurrentLinkedQueue[Row]
+    private val owner = new java.util.concurrent.ConcurrentHashMap[Int, (Int, Long)]
+    override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+      super.onJobStart(e)
+      val exec = Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        .fold(-1L)(_.toLong)
+      e.stageIds.foreach(s => owner.putIfAbsent(s, (e.jobId, exec)))
+    }
     override def onStageCompleted(
         sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
       val si = sc.stageInfo
@@ -37,7 +49,8 @@ object Probe {
       def mb(f: org.apache.spark.executor.TaskMetrics => Long) = m.fold(0L)(f) / 1e6
       val wall = (for {s <- si.submissionTime; c <- si.completionTime}
         yield c - s).getOrElse(-1L)
-      rows.add(Row(si.stageId, si.name.takeWhile(_ != '\n').take(80),
+      val (job, exec) = Option(owner.remove(si.stageId)).getOrElse((-1, -1L))
+      rows.add(Row(si.stageId, job, exec, si.name.takeWhile(_ != '\n').take(80),
         si.numTasks, wall, m.fold(0L)(_.executorRunTime),
         mb(_.shuffleReadMetrics.totalBytesRead),
         mb(_.shuffleWriteMetrics.bytesWritten),
@@ -47,13 +60,13 @@ object Probe {
       * prints and clears the stages seen so far. */
     def drainAndPrint(): Unit = {
       drain()
-      println(f"${"stage"}%6s ${"tasks"}%5s ${"wall_s"}%8s ${"exec_s"}%8s " +
+      println(f"${"stage"}%6s ${"job"}%5s ${"exec"}%5s ${"tasks"}%5s ${"wall_s"}%8s ${"exec_s"}%8s " +
         f"${"shRd_MB"}%9s ${"shWr_MB"}%9s ${"in_MB"}%8s ${"spill"}%7s  name")
       var r = rows.poll()
       val acc = scala.collection.mutable.ArrayBuffer.empty[Row]
       while (r != null) { acc += r; r = rows.poll() }
       acc.sortBy(-_.wallMs).take(30).foreach { x =>
-        println(f"${x.id}%6d ${x.tasks}%5d ${x.wallMs / 1e3}%8.2f " +
+        println(f"${x.id}%6d ${x.job}%5d ${x.exec}%5d ${x.tasks}%5d ${x.wallMs / 1e3}%8.2f " +
           f"${x.execMs / 1e3}%8.2f ${x.shReadMb}%9.1f ${x.shWriteMb}%9.1f " +
           f"${x.inMb}%8.1f ${x.spillMb}%7.1f  ${x.name}")
       }

@@ -31,6 +31,22 @@ class ChurnModelSpec extends SparkSpec {
     assert(Set(0, 1).contains(row.getInt(2)))
   }
 
+  test("evaluate's one-pass metrics equal each evaluator's own evaluate") {
+    import org.apache.spark.ml.evaluation.{BinaryClassificationEvaluator, MulticlassClassificationEvaluator}
+    val scored = result.model.transform(ChurnFixture.df(spark, 1000, seed = 7L)
+      .withColumn("churn_label", org.apache.spark.sql.functions.col("churn_label").cast("double")))
+    val got = ChurnModel.evaluate(scored)
+    def mc(metric: String) = new MulticlassClassificationEvaluator()
+      .setLabelCol("churn_label").setPredictionCol("prediction")
+      .setMetricName(metric).evaluate(scored)
+    val auc = new BinaryClassificationEvaluator()
+      .setLabelCol("churn_label").setRawPredictionCol("rawPrediction")
+      .setMetricName("areaUnderROC").evaluate(scored)
+    val want = Seq(mc("accuracy"), mc("weightedPrecision"), mc("weightedRecall"), mc("f1"), auc)
+    val have = Seq(got.accuracy, got.precision, got.recall, got.f1, got.rocAuc)
+    have.zip(want).foreach { case (h, w) => assert(math.abs(h - w) <= 1e-12, s"$have vs $want") }
+  }
+
   test("save/load round-trips the pipeline bundle") {
     val dir = java.nio.file.Files.createTempDirectory("graft_model").toString
     ChurnModel.save(result, dir)

@@ -16,6 +16,7 @@ class NotifySpec extends SparkSpec {
       .write.mode("overwrite").option("header", "true").csv(csvDir)
     val successes = scala.collection.mutable.ArrayBuffer.empty[DailyPipeline.RunReport]
     val failures = scala.collection.mutable.ArrayBuffer.empty[(String, Throwable)]
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val report = DailyPipeline.run(spark, csvDir,
       notify = DailyPipeline.Notifier(
         onSuccess = r => { successes += r; () },
@@ -23,6 +24,8 @@ class NotifySpec extends SparkSpec {
     assert(successes.toSeq == Seq(report), "onSuccess must fire once, with the report")
     assert(failures.isEmpty)
     assert(report.rowsOut == 300)
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
+    assert(leaked.isEmpty, s"run left cached frames behind: RDDs $leaked")
   }
 
   test("daily pipeline: first failing stage fires the failure sink once; error propagates") {
