@@ -7,7 +7,9 @@ package graft
   * times (default 3) and the MIN is reported: the minimum is the
   * noise-free estimator of a query's true cost (noise only ever adds
   * time). The cache is cleared between reps so no rep is timed against
-  * another's persisted intermediates.
+  * another's persisted intermediates; the session memo
+  * (`core.SessionMemo`) is cleared before each query's first rep, so
+  * rep 1 is cold whatever query ran before, and later reps are warm.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -60,6 +62,7 @@ object Bench {
           f"(session-start anchor $anchor%.3f s)")
       }
       sinceAnchor += 1
+      graft.core.SessionMemo.clear(spark) // rep 1 cold, see above
       var failed = false
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()

@@ -104,50 +104,23 @@ object StatQueries {
   private def detSliceId(df: org.apache.spark.sql.DataFrame,
       bucketKey: org.apache.spark.sql.Column,
       nSlices: Int = 32): org.apache.spark.sql.Column = {
-    // MEMOIZED per (session, STRUCTURAL plan key, key expr): the
+    // MEMOIZED in [[graft.core.SessionMemo]] per (plan, key expr): the
     // boundary literals depend ONLY on (data, key), and q211/q193/q216
     // each paid the two driver collects 1-3 times per run (VERDICT r12
-    // task 5; the logregScored pattern). The key is [[graft.core
-    // .PlanKey]]'s canonicalized-treeString form, NOT the plan object —
-    // file-backed plans never compare equal across invocations (fresh
-    // FileIndex per read), which silently defeated the first cut of
-    // this memo (StatDeterminismSpec's memo-hit contract pins it now).
-    // A different dir is a different path list, so entries stay bounded
-    // by distinct (query-input, key) pairs. Disabled when
-    // perfCacheEnabled is off so StatDeterminismSpec's cache-off pass
-    // still exercises the cold recompute path. Callers pass FRESH
-    // unresolved key columns (a resolved attr would print an unstable
-    // expr id and miss forever — none of the in-repo callers do).
+    // task 5). StatDeterminismSpec's memo-hit contract pins that a
+    // repeated file-backed plan hits. Disabled when perfCacheEnabled is
+    // off so StatDeterminismSpec's cache-off pass still exercises the
+    // cold recompute path. Callers pass FRESH unresolved key columns (a
+    // resolved attr would print an unstable expr id and miss forever —
+    // none of the in-repo callers do).
     if (!perfCacheEnabled)
       return computeSliceId(df, bucketKey, nSlices)
     // Column.toString prints the NORMALIZED node ("c_acctbal",
     // "negative(x)") — the Expression bridge's toString embeds an
     // identity-hashed Origin stack trace and missed forever (probed)
-    val key = (df.sparkSession,
-      graft.core.PlanKey.of(df),
-      bucketKey.toString,
-      nSlices)
-    sliceMemo.computeIfAbsent(key,
-      _ => computeSliceId(df, bucketKey, nSlices))
+    graft.core.SessionMemo(df.sparkSession, "slice", df, bucketKey.toString, nSlices)(
+      computeSliceId(df, bucketKey, nSlices))
   }
-
-  private val sliceMemo =
-    new java.util.concurrent.ConcurrentHashMap[AnyRef, org.apache.spark.sql.Column]
-
-  /** Test hook: drop memoized slice boundaries (paired with
-    * [[resetLogregMemo]] in the determinism spec's freshState). */
-  private[graft] def resetSliceMemo(): Unit = sliceMemo.clear()
-
-  /** Test hook: memo occupancy — the repeat-invocation contract asserts
-    * the SECOND run of a consumer adds no entries (the memo hits; a key
-    * that fails to canonicalize identically would grow it per run and
-    * silently re-pay the boundary collects). */
-  private[graft] def sliceMemoSize: Int = sliceMemo.size
-
-  /** Debug hook (scratch tooling only): the structural key strings. */
-  private[graft] def sliceMemoKeys: Seq[String] =
-    scala.jdk.CollectionConverters.EnumerationHasAsScala(sliceMemo.keys).asScala
-      .map(_.toString).toSeq
 
   private def computeSliceId(df: org.apache.spark.sql.DataFrame,
       bucketKey: org.apache.spark.sql.Column,
@@ -365,37 +338,24 @@ object StatQueries {
     * (persisted) scored under the round-3 weights; carries ck, x1-x3, y,
     * the weights, and the 6dp sigmoid `sg`.
     *
-    * MEMOIZED per (session, dir): ~8 queries consume this frame, and
-    * before the memo each one rebuilt and RE-persisted the whole 3-round
-    * GD chain, so cached copies accumulated for the session lifetime
-    * (ADVICE r11). One entry per data dir is bounded; `clearCache()`
-    * merely drops the blocks — the memoized plan recomputes the same
-    * values (Det-exact sums + 6dp rounding), so reuse is always safe. */
-  private val logregMemo =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String),
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]
+    * MEMOIZED per dir in [[graft.core.SessionMemo]]: ~8 queries consume
+    * this frame, and before the memo each one rebuilt and RE-persisted
+    * the whole 3-round GD chain (ADVICE r11). The feature frame is
+    * memoized too, so a `clearCache()` between queries re-persists both
+    * and no consumer replays the GD chain over 4 uncached feature scans.
+    * Recompute yields the same values (Det-exact sums + 6dp rounding).
+    * With [[perfCacheEnabled]] off each call builds afresh, uncached. */
   private[graft] def logregScored(s: org.apache.spark.sql.SparkSession, dir: String):
-      org.apache.spark.sql.DataFrame = {
-    val (f, scored) = logregMemo.computeIfAbsent((s, dir), _ => logregBuild(s, dir))
-    // RE-register the caches if an external clearCache() (Verify/Bench
-    // run queries back-to-back with one between each) dropped them —
-    // otherwise every later consumer would replay the 3-round GD chain
-    // with the feature frame scanned 4x uncached
-    if (perfCacheEnabled) {
-      if (f.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        f.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-      if (scored.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        scored.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+      org.apache.spark.sql.DataFrame =
+    if (!perfCacheEnabled) logregScore(logregFeatures(s, dir))
+    else {
+      val f = graft.core.SessionMemo.frame(s, "logreg-features", dir)(logregFeatures(s, dir))
+      graft.core.SessionMemo.frame(s, "logreg", dir)(logregScore(f))
     }
-    scored
-  }
-  /** Test hook: drop memoized frames so a spec can rebuild them under a
-    * different [[perfCacheEnabled]] state. */
-  private[graft] def resetLogregMemo(): Unit = logregMemo.clear()
-  private def logregBuild(s: org.apache.spark.sql.SparkSession, dir: String) = {
+  private def logregFeatures(s: org.apache.spark.sql.SparkSession, dir: String) = {
     val cut = Tables.orders(s, dir)
       .agg(max(col("o_orderdate").cast("date")).as("cutoff"))
-    val f0 = Tables.orders(s, dir)
+    Tables.orders(s, dir)
       .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
       .groupBy(col("o_custkey").as("ck"))
       .agg(min(col("c_acctbal")).as("ab"), count(lit(1)).as("cnt"),
@@ -406,7 +366,8 @@ object StatQueries {
         col("cnt").cast("double").as("x2"),
         floor((col("sx") / col("cnt")) / 16384).cast("double").as("x3"),
         when(col("last_o") < date_sub(col("cutoff"), 90), 1).otherwise(0).as("y"))
-    val f = maybeCache(f0)
+  }
+  private def logregScore(f: org.apache.spark.sql.DataFrame) = {
     def sig(r: org.apache.spark.sql.DataFrame) = r.withColumn("sg",
       round(lit(1.0) / (lit(1.0) + exp(-(col("wa") + col("wb") * col("x1") +
         col("wc") * col("x2") + col("wd") * col("x3")))), 6))
@@ -423,14 +384,13 @@ object StatQueries {
         (col("wc") - lit(0.05) * (col("gc") / col("n"))).as("wc"),
         (col("wd") - lit(0.05) * (col("gd") / col("n"))).as("wd"))
     }
-    val w0 = s.range(1).select(lit(0.0).as("wa"),
+    val w0 = f.sparkSession.range(1).select(lit(0.0).as("wa"),
       lit(0.0).as("wb"), lit(0.0).as("wc"), lit(0.0).as("wd"))
-    // cache the SCORED frame: q177 consumes it three times (calibration
-    // stats, rank selection, eval coverage) and each uncached use would
-    // replay the whole 3-round weight chain — a measured 4x on the
-    // sf0.1 bench (6.3 s -> ~1.6 s). Perf hint only: recompute yields
-    // the same values (Det sums, 6dp rounding).
-    (f, maybeCache(sig(f.crossJoin(broadcast(step(step(step(w0))))))))
+    // the SCORED frame is memoized persisted: q177 consumes it three
+    // times (calibration stats, rank selection, eval coverage) and each
+    // uncached use would replay the whole 3-round weight chain — a
+    // measured 4x on the sf0.1 bench (6.3 s -> ~1.6 s)
+    sig(f.crossJoin(broadcast(step(step(step(w0))))))
   }
 
   val defs: Seq[QueryDef] = Seq(

@@ -372,7 +372,7 @@ object CorpusPipeline {
     // plan re-analyzed/re-codegen'd by every consumer job, not the data)
     // checkpoint the frequency table ONCE here; the trainer and the
     // segmentation both detect the already-cut lineage and skip their
-    // own localCheckpoint (Bpe.checkpointOnce — review r16: the double
+    // own localCheckpoint (Frames.checkpointOnce — review r16: the double
     // checkpoint cost two extra materialization jobs in this stage)
     val bpeFreqs = graft.ops.Bpe.wordFreqs(budgeted, "text")
       .localCheckpoint(true)

@@ -43,15 +43,6 @@ object Bpe {
     * weighted pair frequency that won the round. */
   final case class MergeRule(rank: Int, left: String, right: String, count: Long)
 
-  /** localCheckpoint unless `df` already IS one (review r16): the funnel
-    * checkpoints the frequency table once and passes it to both the
-    * trainer and the segmentation — re-checkpointing an already-cut
-    * lineage would re-materialize the table for nothing. Shared as
-    * [[graft.core.Frames.checkpointOnce]] since r16's optimization round
-    * (the iterative graph ops need the same idempotence). */
-  private def checkpointOnce(df: DataFrame): DataFrame =
-    graft.core.Frames.checkpointOnce(df)
-
   /** The q62 pre-tokenization (letter runs | digit runs | punct runs) —
     * shared so the trainer and the token-count queries see one token
     * definition. */
@@ -94,7 +85,7 @@ object Bpe {
       localFoldThreshold: Long = 65536): Seq[MergeRule] = {
     // checkpoint BEFORE the size probe so the corpus-sized aggregation
     // behind freqs runs once, not once for count + once for the loop
-    val f = checkpointOnce(freqs)
+    val f = graft.core.Frames.checkpointOnce(freqs)
     if (nMerges > 0 && f.count() <= localFoldThreshold)
       trainBpeLocal(
         f.select("word", "cnt").collect()
@@ -225,7 +216,7 @@ object Bpe {
     // chain's analysis + codegen again — measured as the bulk of the
     // funnel's bpe stage at small SF. applyMergesLocal IS the kernel
     // (BpeSpec pins equality), so the routes are bit-identical.
-    val f = checkpointOnce(freqs)
+    val f = graft.core.Frames.checkpointOnce(freqs)
     if (f.count() <= localFoldThreshold) {
       val spark = f.sparkSession
       import spark.implicits._

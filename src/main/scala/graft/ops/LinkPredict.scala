@@ -38,20 +38,6 @@ import org.apache.spark.sql.functions._
   */
 object LinkPredict {
 
-  /** Memoized cached adjacency per (session, canonicalized edge plan):
-    * the ADVICE r12 leak was one orphaned MEMORY_ONLY frame PER
-    * invocation for the session lifetime; keying the cache on the input
-    * plan bounds it to one entry per distinct edge set (the
-    * logregScored/sliceMemo pattern) and repeated invocations — the
-    * Verify/Bench/ScaleCurve shape — reuse the same blocks. Eviction or
-    * an external clearCache() recomputes identical values (the frame is
-    * a pure join of exact aggregates). */
-  private val adjMemo =
-    new java.util.concurrent.ConcurrentHashMap[AnyRef, DataFrame]
-  private[graft] def resetAdjMemo(): Unit = adjMemo.clear()
-  /** Test hook — the memo-hit contract (see [[graft.core.PlanKey]]). */
-  private[graft] def adjMemoSize: Int = adjMemo.size
-
   /** Top-`topK` Adamic-Adar candidates per left vertex over the
     * undirected graph `edges` (one row per edge, `uCol` < `vCol`,
     * distinct). Score in integer micro-units: Σ_w round(10⁶ / ln deg w)
@@ -69,11 +55,7 @@ object LinkPredict {
     // same plan-keyed memo as the adjacency so repeated invocations and
     // the probe's blocking collect don't each replay the caller's
     // (possibly expensive) edge derivation
-    val e = adjMemo.computeIfAbsent(
-      ("edges", edges.sparkSession, graft.core.PlanKey.of(ePlain)),
-      _ => ePlain.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY))
-    if (e.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      e.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    val e = graft.core.SessionMemo.frame(edges.sparkSession, "edges", ePlain)(ePlain)
     // (u < v) + distinct on input => the symmetrized list is distinct by
     // construction; a defensive .distinct() here would be a wasted shuffle
     val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
@@ -82,11 +64,9 @@ object LinkPredict {
     // the job) never joins the degree table at all
     val deg = sym.groupBy("u").agg(count(lit(1)).cast("int").as("_cdeg"))
     val adjPlain = sym.join(deg.withColumnRenamed("u", "v"), "v")
-    val adj = adjMemo.computeIfAbsent(
-      ("adj", edges.sparkSession, graft.core.PlanKey.of(adjPlain)),
-      _ => adjPlain.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY))
-    if (adj.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      adj.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+    // one cached adjacency per distinct edge set, not one leaked per
+    // invocation (ADVICE r12); recompute yields identical values
+    val adj = graft.core.SessionMemo.frame(edges.sparkSession, "adj", adjPlain)(adjPlain)
     val aaOf = (cdeg: org.apache.spark.sql.Column) =>
       round(lit(1000000) / log(cdeg)).cast("long")
     // HOT/COLD split on the center degree — the AQE-skew-join pattern,

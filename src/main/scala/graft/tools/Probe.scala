@@ -4,9 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** The ONE parameterized diagnostic probe (VERDICT r14 task 5 — the
   * per-round one-shot probe mains kept accreting; this replaces them
-  * all). Prints the formatted plan and warm/cold timings for any
-  * registry query, so a bench-notes adjudication is a command line, not
-  * a new main.
+  * all). Prints the formatted plan and timings for any registry query
+  * (rep 1 cold, later reps warm on the session memo), so a bench-notes
+  * adjudication is a command line, not a new main.
   *
   * Usage:
   *   tools/run.sh graft.tools.Probe <queryName> [sfDir] [reps]
@@ -86,6 +86,9 @@ object Probe {
         s"unknown query '$name'; names: ${graft.SparkEntry.queries.keys.toSeq.sorted.take(8).mkString(", ")}…"))
     if (!sys.env.contains("SPARK_GRAFT_PROBE_NOPLAN"))
       fn(spark, dir).explain("formatted")
+    // building the plan fills the session memo (slice boundaries are
+    // collected while planning): drop it so rep 1 is cold
+    graft.core.SessionMemo.clear(spark)
     val stages = if (sys.env.contains("SPARK_GRAFT_PROBE_STAGES"))
       Some(new StageMetrics(spark)) else None
     (1 to reps).foreach { i =>

@@ -97,17 +97,17 @@ class LinkPredictSpec extends SparkSpec {
   }
 
   test("edge/adjacency memo HITS across invocations: second run adds no entries") {
-    LinkPredict.resetAdjMemo()
+    core.SessionMemo.clear(spark)
     val e = hubEdges.toDF("u", "v")
     LinkPredict.adamicAdarTopK(e, "u", "v", 2, 5).count()
-    val afterFirst = LinkPredict.adjMemoSize
+    val afterFirst = core.SessionMemo.size(spark)
     assert(afterFirst > 0)
     spark.catalog.clearCache()
     LinkPredict.adamicAdarTopK(hubEdges.toDF("u", "v"), "u", "v", 2, 5).count()
-    assert(LinkPredict.adjMemoSize == afterFirst,
-      s"memo grew $afterFirst -> ${LinkPredict.adjMemoSize}: a fresh cached " +
+    assert(core.SessionMemo.size(spark) == afterFirst,
+      s"memo grew $afterFirst -> ${core.SessionMemo.size(spark)}: a fresh cached " +
         "frame leaks per invocation (the ADVICE r12 class)")
-    LinkPredict.resetAdjMemo()
+    core.SessionMemo.clear(spark)
   }
 
   test("hub wedge cells are bounded: no (v,i,j) cell exceeds blockSize^2") {

@@ -57,8 +57,7 @@ class StatDeterminismSpec extends SparkSpec {
 
   private def freshState(): Unit = {
     spark.catalog.clearCache()
-    StatQueries.resetLogregMemo()
-    StatQueries.resetSliceMemo()
+    core.SessionMemo.clear(spark)
   }
 
   test("rank/prefix-sum consumers: run-twice with clearCache() is bit-identical") {
@@ -90,14 +89,14 @@ class StatDeterminismSpec extends SparkSpec {
     Seq("q211_jonckheere", "q216_score_ks", "q193_gain_lift").foreach { n =>
       run(n).collect(); ()
     }
-    val afterFirst = StatQueries.sliceMemoSize
+    val afterFirst = core.SessionMemo.size(spark)
     assert(afterFirst > 0, "memo never populated")
     spark.catalog.clearCache() // blocks drop; boundary literals must not
     Seq("q211_jonckheere", "q216_score_ks", "q193_gain_lift").foreach { n =>
       run(n).collect(); ()
     }
-    assert(StatQueries.sliceMemoSize == afterFirst,
-      s"memo grew $afterFirst -> ${StatQueries.sliceMemoSize}: keys fail to " +
+    assert(core.SessionMemo.size(spark) == afterFirst,
+      s"memo grew $afterFirst -> ${core.SessionMemo.size(spark)}: keys fail to " +
         "canonicalize identically across invocations, boundary collects re-paid")
   }
 
