@@ -1,6 +1,7 @@
 package graft.app
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.core.ChurnFixture
 import graft.streaming.Streaming
 
@@ -8,11 +9,20 @@ import graft.streaming.Streaming
   * dir; the ingest stream picks each wave up, runs the batch transform
   * via foreachBatch, and appends to Silver exactly-once. Also runs the
   * watermarked event-window aggregation over a rate-limited synthetic
-  * event stream.
+  * event stream. The ingest and MinHash waves print their micro-batch's
+  * progress (input rows, time in the batch body).
   *
   *   tools/run.sh graft.app.StreamDemo [rowsPerWave] [waves]
   */
 object StreamDemo {
+  /** A wave's micro-batch as its query reported it: input rows and the
+    * time in the batch body (`addBatch`). */
+  private def progress(q: StreamingQuery): String =
+    Option(q.lastProgress).fold("no micro-batch") { p =>
+      s"micro-batch ${p.batchId}: ${p.numInputRows} input rows, " +
+        s"addBatch ${p.durationMs.get("addBatch")} ms"
+    }
+
   def main(args: Array[String]): Unit = {
     val perWave = args.headOption.map(_.toInt).getOrElse(2000)
     val waves = args.lift(1).map(_.toInt).getOrElse(3)
@@ -30,7 +40,7 @@ object StreamDemo {
         transform = df => df.withColumn("_wave_seen", lit(w)))
       q.awaitTermination(120000)
       val total = spark.read.parquet(silver).count()
-      println(s"wave $w: landed ${perWave} rows -> silver total $total")
+      println(s"wave $w: landed ${perWave} rows -> silver total $total (${progress(q)})")
     }
     val finalCount = spark.read.parquet(silver).count()
     val batches = spark.read.parquet(silver).select("_batch_id").distinct().count()
@@ -78,6 +88,7 @@ object StreamDemo {
       } // not as a misleading index-monotonicity break
       indexRows += w.count()
       indexMonotone &&= TextDedup.readMinhashIndex(spark, s"$dwork/idx").count() == indexRows
+      println(s"dedup stream wave: index $indexRows rows (${progress(q)})")
     }
     val streamedPairs = spark.read.parquet(s"$dwork/pairs")
       .select("id_new", "id_old").collect()

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Dataset, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -135,15 +135,29 @@ object Streaming {
     * previous attempt (effectively-once without a transactional sink).
     * With `stage = Some((live, suffix))` each batch first runs
     * [[recoverStage]] on the dir the loop rewrites by staged swap.
+    *
+    * The batch is rehomed onto `input`'s session before anything runs.
+    * A streaming query runs its batches on a clone of that session, and
+    * with `spark.sql.artifact.isolation.enabled` (Spark's default) every
+    * session gets its own class loader. Spark caches generated classes
+    * by (class loader, code), so every AvailableNow query, one per wave,
+    * would recompile every class the wave's reads, probes and writes
+    * generate, the same code as the wave before. The starting session
+    * outlives the queries, so on it a wave reuses the classes earlier
+    * waves compiled; every loop takes its session from
+    * `batch.sparkSession`, so all its jobs run there. The rehome is a
+    * relabel of the already-planned batch (see `GraftShim.rehome`).
     */
   private def microBatch(input: DataFrame, checkpoint: String,
       stage: Option[(String, String)] = None)(
       body: (DataFrame, Long, String) => Unit): StreamingQuery = {
     val key = runKey(checkpoint)
+    val home = input.sparkSession
     input.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch { (delivered: DataFrame, batchId: Long) =>
+        val batch = GraftShim.rehome(home, delivered)
         stage.foreach { case (live, suffix) =>
-          recoverStage(batch.sparkSession, live, suffix)
+          recoverStage(home, live, suffix)
         }
         body(batch, batchId, s"$key-$batchId")
       }

@@ -1,6 +1,8 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** The ONE parameterized diagnostic probe (VERDICT r14 task 5 — the
   * per-round one-shot probe mains kept accreting; this replaces them
@@ -17,6 +19,9 @@ import org.apache.spark.sql.SparkSession
   * print per-stage metrics (wall, executor time, shuffle bytes, spill)
   * after each rep — the Spark-UI stage table for a headless box, the
   * guide-§1 "decide whether the time is shuffle read or compute" loop.
+  * Each rep's line also counts the generated classes the rep compiled
+  * and their Janino time (Spark's codegen metrics): the planning-side
+  * cost that no stage shows.
   */
 object Probe {
 
@@ -65,11 +70,18 @@ object Probe {
       var r = rows.poll()
       val acc = scala.collection.mutable.ArrayBuffer.empty[Row]
       while (r != null) { acc += r; r = rows.poll() }
-      acc.sortBy(-_.wallMs).take(30).foreach { x =>
+      val (shown, rest) = acc.sortBy(-_.wallMs).splitAt(30)
+      shown.foreach { x =>
         println(f"${x.id}%6d ${x.job}%5d ${x.exec}%5d ${x.tasks}%5d ${x.wallMs / 1e3}%8.2f " +
           f"${x.execMs / 1e3}%8.2f ${x.shReadMb}%9.1f ${x.shWriteMb}%9.1f " +
           f"${x.inMb}%8.1f ${x.spillMb}%7.1f  ${x.name}")
       }
+      // the rows must add up to TOTAL: one row for the stages not shown
+      if (rest.nonEmpty)
+        println(f"${"+" + rest.size}%6s ${""}%5s ${""}%5s ${rest.map(_.tasks).sum}%5d ${""}%8s " +
+          f"${rest.map(_.execMs).sum / 1e3}%8.2f ${rest.map(_.shReadMb).sum}%9.1f " +
+          f"${rest.map(_.shWriteMb).sum}%9.1f ${rest.map(_.inMb).sum}%8.1f " +
+          f"${rest.map(_.spillMb).sum}%7.1f  more stages")
       println(f"TOTAL exec ${acc.map(_.execMs).sum / 1e3}%.2f s over " +
         f"${acc.size} stages / ${acc.map(_.tasks).sum} tasks")
     }
@@ -93,9 +105,13 @@ object Probe {
       Some(new StageMetrics(spark)) else None
     (1 to reps).foreach { i =>
       spark.catalog.clearCache()
+      val classes0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val janino0 = CodeGenerator.compileTime
       val t0 = System.nanoTime
       val n = fn(spark, dir).collect().length
-      println(f"rep $i: ${(System.nanoTime - t0) / 1e9}%.2fs ($n rows)")
+      println(f"rep $i: ${(System.nanoTime - t0) / 1e9}%.2fs ($n rows); codegen " +
+        f"${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - classes0} classes compiled " +
+        f"in ${(CodeGenerator.compileTime - janino0) / 1e6}%.0f ms")
       stages.foreach(_.drainAndPrint())
     }
     spark.stop()
