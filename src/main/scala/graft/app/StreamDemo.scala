@@ -23,6 +23,13 @@ object StreamDemo {
         s"addBatch ${p.durationMs.get("addBatch")} ms"
     }
 
+  /** Waits for a wave's query. A timeout fails the demo as a timeout,
+    * not as a wrong count or a broken gate further on. */
+  private def awaitWave(q: StreamingQuery, what: String, ms: Long = 120000): Unit =
+    if (!q.awaitTermination(ms)) {
+      println(s"$what timed out"); q.sparkSession.stop(); sys.exit(2)
+    }
+
   def main(args: Array[String]): Unit = {
     val perWave = args.headOption.map(_.toInt).getOrElse(2000)
     val waves = args.lift(1).map(_.toInt).getOrElse(3)
@@ -38,7 +45,7 @@ object StreamDemo {
         .write.mode("append").option("header", "true").csv(raw)
       val q = Streaming.ingestStream(spark, raw, silver, ckpt,
         transform = df => df.withColumn("_wave_seen", lit(w)))
-      q.awaitTermination(120000)
+      awaitWave(q, s"ingest wave $w")
       val total = spark.read.parquet(silver).count()
       println(s"wave $w: landed ${perWave} rows -> silver total $total (${progress(q)})")
     }
@@ -59,7 +66,7 @@ object StreamDemo {
     val q = agg.writeStream.format("memory").queryName("wins")
       .outputMode("complete")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
+    awaitWave(q, "windowed event query")
     println("windowed event counts (first 6 windows):")
     spark.sql("SELECT * FROM wins ORDER BY window_start, event_type LIMIT 6")
       .collect().foreach(r => println("  " + r))
@@ -83,9 +90,7 @@ object StreamDemo {
       val q = Streaming.incrementalDedupStream(
         spark.readStream.schema(docs.schema).parquet(s"$dwork/raw"),
         s"$dwork/idx", s"$dwork/pairs", s"$dwork/ckpt")
-      if (!q.awaitTermination(120000)) { // a timeout must fail AS a timeout,
-        println("dedup stream wave timed out"); spark.stop(); sys.exit(2)
-      } // not as a misleading index-monotonicity break
+      awaitWave(q, "dedup stream wave")
       indexRows += w.count()
       indexMonotone &&= TextDedup.readMinhashIndex(spark, s"$dwork/idx").count() == indexRows
       println(s"dedup stream wave: index $indexRows rows (${progress(q)})")
@@ -118,9 +123,7 @@ object StreamDemo {
       val q = Streaming.incrementalVectorDedupStream(
         spark.readStream.schema(emb.schema).parquet(s"$vwork/raw"),
         s"$vwork/idx", s"$vwork/pairs", s"$vwork/ckpt", threshold = 0.25)
-      if (!q.awaitTermination(120000)) {
-        println("vector dedup stream wave timed out"); spark.stop(); sys.exit(2)
-      }
+      awaitWave(q, "vector dedup stream wave")
       vIndexRows += w.count()
       vIndexMonotone &&= VectorSim.readSignIndex(spark, s"$vwork/idx").count() == vIndexRows
     }
@@ -151,9 +154,7 @@ object StreamDemo {
       val q = Streaming.searchIndexMaintenanceStream(
         spark.readStream.schema(docs.schema).parquet(s"$swork/raw"),
         s"$swork/idx", s"$swork/ckpt", compactEvery = 2)
-      if (!q.awaitTermination(120000)) {
-        println("search index stream wave timed out"); spark.stop(); sys.exit(2)
-      }
+      awaitWave(q, "search index stream wave")
       val ingested = docWaves.take(k + 1).reduce(_ unionByName _)
       val scan = TextRank.bm25(ingested, "text", "doc_id", terms)
         .collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSet
@@ -184,9 +185,7 @@ object StreamDemo {
       val q = Streaming.decontamFilterStream(
         spark.readStream.schema(docs.schema).parquet(s"$cwork/raw"),
         s"$cwork/idx", s"$cwork/clean", s"$cwork/flagged", s"$cwork/ckpt")
-      if (!q.awaitTermination(120000)) {
-        println("decontam stream wave timed out"); spark.stop(); sys.exit(2)
-      }
+      awaitWave(q, "decontam stream wave")
     }
     val cleanIds = spark.read.parquet(s"$cwork/clean")
       .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -222,9 +221,7 @@ object StreamDemo {
         spark.readStream.schema(w.schema).parquet(s"$mwork/raw_w$k"),
         s"$mwork/tbl", s"$mwork/view", s"$mwork/ckpt_$k",
         Seq("doc_id"), "source", "n_chars")
-      if (!q.awaitTermination(120000)) {
-        println("materialized view wave timed out"); spark.stop(); sys.exit(2)
-      }
+      awaitWave(q, "materialized view wave")
     }
     val maintained = IncrementalAgg.present(
         VersionedTable.read(spark, s"$mwork/view"), "source")
@@ -248,9 +245,7 @@ object StreamDemo {
       val q = Streaming.sketchStatsStream(
         spark.readStream.schema(docs.schema).parquet(s"$kwork/raw"),
         s"$kwork/sk", s"$kwork/ckpt", "doc_id", compactEvery = 2)
-      if (!q.awaitTermination(120000)) {
-        println("sketch stream wave timed out"); spark.stop(); sys.exit(2)
-      }
+      awaitWave(q, "sketch stream wave")
     }
     val estDistinct = SketchStats.hllDistinct(spark, s"$kwork/sk").head.getLong(0)
     val exactDistinct = docs.select("doc_id").distinct().count()
@@ -272,9 +267,7 @@ object StreamDemo {
       val q = Streaming.histStream(
         spark.readStream.schema(evTbl.schema).parquet(s"$hwork/raw"),
         s"$hwork/h", s"$hwork/ckpt", "value", width = 25.0)
-      if (!q.awaitTermination(120000)) {
-        println("hist stream wave timed out"); spark.stop(); sys.exit(2)
-      }
+      awaitWave(q, "hist stream wave")
     }
     val servedHist = SketchStats.histogram(spark, s"$hwork/h")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -303,9 +296,7 @@ object StreamDemo {
         .writeStream.format("parquet").option("path", s"$sessWork/out")
         .outputMode("append").option("checkpointLocation", s"$sessWork/ckpt")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      if (!q.awaitTermination(180000)) {
-        println("session stream wave timed out"); spark.stop(); sys.exit(2)
-      }
+      awaitWave(q, "session stream wave", 180000)
     }
     runSess()
     sentinel.write.mode("append").parquet(s"$sessWork/raw"); runSess(); runSess()

@@ -410,23 +410,17 @@ object CorpusOps {
     // a segment makes a version CLAIM only if it holds committed rows:
     // an empty batch's zero-row segment contributes nothing additive and
     // must not read as "<unversioned>", and a mid-write-crashed segment
-    // (only _temporary inside) is unreadable — skipping it here mirrors
+    // (only _temporary inside) holds no committed data — skipping it mirrors
     // the aggregate read below, which sees no rows from it either (the
     // round-14 crashed-dir class, at segment grain). A null-stamped row
     // (hand-repaired segment) folds to "<unversioned>" rather than
     // NPE-ing the sort.
     val versions = segs.flatMap { seg =>
-      val rows =
-        try spark.read.parquet(seg).limit(1).collect()
-        catch {
-          case e: org.apache.spark.sql.AnalysisException
-              if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") ||
-                e.getMessage.contains("Unable to infer schema") => Array.empty[org.apache.spark.sql.Row]
+      graft.core.ParquetDir.committed(spark, seg)
+        .flatMap(_.limit(1).collect().headOption).map { r =>
+          if (!r.schema.fieldNames.contains("fold_version")) "<unversioned>"
+          else Option(r.getAs[String]("fold_version")).getOrElse("<unversioned>")
         }
-      rows.headOption.map { r =>
-        if (!r.schema.fieldNames.contains("fold_version")) "<unversioned>"
-        else Option(r.getAs[String]("fold_version")).getOrElse("<unversioned>")
-      }
     }.distinct.sorted
     require(versions.length <= 1,
       s"domain ledger $dir mixes fold versions ${versions.mkString(", ")}: " +

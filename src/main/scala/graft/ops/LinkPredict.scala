@@ -142,43 +142,20 @@ object LinkPredict {
     // surviving pair is small (the minCommon >= 2 filter keeps the long
     // tail of cn = 1 pairs in the shuffle either way).
     //
-    // Reduce-side parallelism (r16, guide §5 spill remedy): the pair
-    // aggregation's hash state is DISTINCT-PAIR-sized, and wedges barely
-    // repeat (measured at sf0.1: 148M wedges -> 101M distinct pairs,
-    // 1.46 wedges/pair), so at shuffle.partitions = cores each task
-    // builds a multi-million-entry map and falls back to sort-based
-    // aggregation — a measured 3.2 GB disk spill in the one stage that
-    // dominates this operator. Fan the ONE wedge exchange out over
-    // 5x defaultParallelism reducers instead: per-task state drops
-    // ~an order of magnitude below the execution-memory share and the
-    // reduce-side spill disappears. 5x, not more, because the MAP side
-    // of this exchange flips from the bypass writer to the sort-based
-    // writer past spark.shuffle.sort.bypassMergeThreshold (default 200),
-    // and 32 map tasks each sorting 4.6M-row partitions re-created the
-    // spill on the map side (A/B'd at 8x: reduce spill 0 but map spill
-    // 1.3 GB and 2.4x the map CPU). Scale-adaptive, not a local
-    // constant: defaultParallelism is total executor cores, so reducers
-    // stay proportional to the machine; the floor keeps a session whose
-    // shuffle.partitions is configured HIGHER than 5x cores at its own
-    // setting.
-    // Re-adjudicated r17 (VERDICT r16 task 1 said this fan-out doubled
-    // q201): a same-host controlled A/B under Bench conditions
-    // (min-of-3, cold JVM per session, 2 sessions per variant) does NOT
-    // reproduce the regression — at 32 cpus aggParts 160/32/64 all read
-    // 17-23 s (overlapping), and at 8 cpus the session-default 8
-    // reducers (the pre-r16 behavior) read 62.1 s vs 37.5 s for this
-    // formula's 40 — the per-task pair state at 8 reducers spills hard,
-    // exactly the guide-§5 failure the r16 change targeted. The two r16
-    // post-change full sessions that read 41-43 s were both
-    // host-degraded (smoke1 total 346.8 s, builder-adjudicated; the
-    // driver session carried the tail-stall class), and the r17-base
-    // session with this exact code reads q201 = 16.9 s. Kept; the env
-    // override below is the A/B instrument (and the documented scale
-    // knob for a deployment whose reducer sizing needs differ).
-    val aggParts = sys.env.get("SPARK_GRAFT_AA_AGGPARTS").map(_.toInt)
-      .getOrElse(math.max(
-        e.sparkSession.sparkContext.defaultParallelism * 5,
-        e.sparkSession.sessionState.conf.numShufflePartitions))
+    // Reduce-side parallelism: the pair aggregation's hash state is
+    // distinct-pair-sized and wedges barely repeat (sf0.1: 148M wedges
+    // -> 101M distinct pairs), so at shuffle.partitions = cores each task
+    // builds a multi-million-entry map and spills (3.2 GB measured). 5x
+    // defaultParallelism reducers keep per-task state well inside the
+    // execution-memory share. Not more: past
+    // spark.shuffle.sort.bypassMergeThreshold (200) the map side switches
+    // to the sort-based writer and spills instead (at 8x: 1.3 GB map
+    // spill, 2.4x the map CPU). defaultParallelism is total executor
+    // cores, so reducers scale with the machine; the floor keeps a
+    // session configured with more shuffle partitions at its own setting.
+    val aggParts = math.max(
+      e.sparkSession.sparkContext.defaultParallelism * 5,
+      e.sparkSession.sessionState.conf.numShufflePartitions)
     val unlinked = if (packable) {
       // projection collapses below the union, so the exchange carries
       // 16-byte (pk, _aa) rows only; the anti-join then runs ON the

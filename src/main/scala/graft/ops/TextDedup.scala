@@ -1167,9 +1167,9 @@ object TextDedup {
     * SEGMENT grain (one row per batch partition), not a full-index
     * distinct scan: this runs on every probe AND append, and the stamp
     * is constant per partition by construction (the domainLedger
-    * serve-cost rule). Unreadable partitions (a crashed append's
-    * _temporary-only dir) make no claim — the probe's own read skips
-    * them identically. */
+    * serve-cost rule). Partitions with no committed data (a crashed
+    * append's _temporary-only dir) make no claim — the probe's own read
+    * skips them identically. */
   def gramCountIndexParams(spark: org.apache.spark.sql.SparkSession,
       path: String): (Int, Boolean) = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -1177,12 +1177,7 @@ object TextDedup {
     val parts = fs.listStatus(p).filter(_.isDirectory)
       .map(_.getPath.toString).filter(_.contains("batch="))
     val stamps = parts.flatMap { b =>
-      val d = try Some(spark.read.parquet(b)) catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") ||
-              e.getMessage.contains("Unable to infer schema") => None
-      }
-      d.flatMap { df =>
+      graft.core.ParquetDir.committed(spark, b).flatMap { df =>
         df.select("_n", "_hash_grams").limit(1).collect().headOption
           .map { r =>
             val hashed = r.getBoolean(1)

@@ -1,12 +1,12 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Dataset, GraftShim, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
-import graft.core.ChurnSchema
+import graft.core.{ChurnSchema, ParquetDir}
 
 /** Structured Streaming extension (SURVEY §2.11 / §7 step 9): the
   * reference is batch-only with a daily Airflow cadence; its own docs
@@ -232,19 +232,20 @@ object Streaming {
   }
 
   /** The committed-data gate every index loop uses instead of a bare
-    * `fs.exists`: the prior index at `dir`, read ONCE, flat layouts
-    * rejected, and this batch's own `partCol=<own>` partition excluded —
-    * or None when `dir` holds no committed parquet. A FIRST batch killed
-    * mid-append leaves the directory existing with only `_temporary`
-    * inside (no committed part files), and a bare gate then routes every
-    * retry into a read that crash-loops schema inference forever.
+    * `fs.exists`: the prior index at `dir`, flat layouts rejected, and
+    * this batch's own `partCol=<own>` partition excluded — or None when
+    * `dir` holds no committed parquet by [[graft.core.ParquetDir]]'s rule.
+    * A FIRST batch killed mid-append leaves the directory existing with
+    * only `_temporary` inside (no committed part files), which a bare
+    * gate would route into a read of nothing, on every retry. The schema
+    * comes from one footer, so building the frame starts no job.
     *
-    * When the dir is unreadable but any of the kind's `siblings` already
-    * holds entries, the index did not fail to bootstrap — it LOST data
-    * (manual cleanup, botched repair) while its downstream state
-    * survived; silently answering "empty" there would rebuild from
-    * nothing and corrupt every later fold (double-counted ledger
-    * deltas, re-admitted duplicates), so that case fails loudly.
+    * When the dir holds no committed parquet but any of the kind's
+    * `siblings` already holds entries, the index did not fail to
+    * bootstrap — it LOST data (manual cleanup, botched repair) while its
+    * downstream state survived; silently answering "empty" there would
+    * rebuild from nothing and corrupt every later fold (double-counted
+    * ledger deltas, re-admitted duplicates), so that case fails loudly.
     *
     * Sibling entries named `<col>=<own>` are IGNORED when classifying a
     * sibling as populated: every loop commits sibling output BEFORE the
@@ -265,19 +266,16 @@ object Streaming {
     val p = new Path(dir)
     val fs = p.getFileSystem(sp.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
-    else try {
-      val idx = sp.read.parquet(dir)
-      // a flat dir would survive exactly one append before partition
-      // discovery hits conflicting directory depths — reject it up front
-      require(idx.columns.contains(ix.partCol), ix.flatIndex)
-      // cast FIRST: a numeric-keyed legacy layout infers the key as int,
-      // and int =!= string coerces the literal to null — which would
-      // silently filter out the ENTIRE prior index
-      Some(idx.filter(col(ix.partCol).cast("string") =!= lit(own)))
-    } catch {
-      case e: AnalysisException
-          if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") ||
-            e.getMessage.contains("Unable to infer schema") =>
+    else ParquetDir.committed(sp, dir) match {
+      case Some(idx) =>
+        // a flat dir would survive exactly one append before partition
+        // discovery hits conflicting directory depths — reject it up front
+        require(idx.columns.contains(ix.partCol), ix.flatIndex)
+        // cast FIRST: a numeric-keyed legacy layout infers the key as int,
+        // and int =!= string coerces the literal to null — which would
+        // silently filter out the ENTIRE prior index
+        Some(idx.filter(col(ix.partCol).cast("string") =!= lit(own)))
+      case None =>
         val populated = ix.siblings.filter { s =>
           val q = new Path(s)
           fs.exists(q) && fs.listStatus(q).exists { st =>

@@ -1,14 +1,10 @@
 package graft.warehouse
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import graft.core.ParquetDir
 
 /** Warehouse layer (SURVEY §2.1 S5-S8, §2.3 J2).
   *
@@ -68,44 +64,29 @@ object Sinks {
   /** S8: the newest gold partition, found from file-system metadata.
     *
     * Lists the top-level `dt=` directories of `basePath` and takes the
-    * newest by string order (the order `max` on the string `dt` gives),
-    * skipping any directory without a visible data file: names starting
-    * with `_` or `.` (`_SUCCESS`, `_temporary/`, `.crc`) are not data, as
-    * in Spark's partition discovery, so a write in flight or an empty
-    * one is never the latest. The null partition (what an empty `dt`
-    * writes) is skipped too, as `max` skips null. The schema comes from
-    * the footer of one data file in that directory, read on the driver
-    * (Spark's own non-merging inference also reads one footer, but in a
-    * job). Building the frame runs no Spark job and opens no file outside
-    * the newest day; `dt` is a string column, as `writeGold` wrote it.
+    * newest by string order (the order `max` on the string `dt` gives)
+    * that holds committed data by [[graft.core.ParquetDir]]'s rule, so a
+    * write in flight or an empty one is never the latest. The null
+    * partition (what an empty `dt` writes) is skipped too, as `max` skips
+    * null. The schema comes from one footer in that directory, so building
+    * the frame runs no Spark job and opens no file outside the newest day;
+    * `dt` is a string column, as `writeGold` wrote it.
     */
   def readLatestGold(spark: SparkSession, basePath: String): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
     val root = new Path(basePath)
-    val fs = root.getFileSystem(conf)
-    def visible(p: Path) = !p.getName.startsWith("_") && !p.getName.startsWith(".")
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val days = fs.listStatus(root)
       .filter(d => d.isDirectory && d.getPath.getName.startsWith("dt=") &&
         d.getPath.getName != s"dt=${ExternalCatalogUtils.DEFAULT_PARTITION_NAME}")
       .map(_.getPath).sortBy(_.getName)(Ordering[String].reverse)
-    val (day, file) = days.iterator
-      .flatMap(d => fs.listStatus(d).find(f => f.isFile && visible(f.getPath)).map(f => (d, f.getPath)))
+    val (day, schema) = days.iterator
+      .flatMap(d => ParquetDir.schema(spark, d.toString).map((d, _)))
       .nextOption()
       .getOrElse(throw new IllegalArgumentException(
         s"no dt= partition with a data file under $basePath"))
-    spark.read.schema(footerSchema(spark, conf, file))
+    spark.read.schema(schema)
       .option("basePath", basePath).parquet(day.toString)
       .withColumn("dt", col("dt").cast("string"))
-  }
-
-  /** The Spark schema stored in one parquet file's footer, read on the
-    * driver: the Spark row metadata when present, else the schema
-    * converted from the parquet types. */
-  private def footerSchema(spark: SparkSession, conf: Configuration, file: Path): StructType = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    val footer = try reader.getFooter finally reader.close()
-    ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
-      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   /** ORC sink/scan (zlib, the ORC default) — the interchange format a

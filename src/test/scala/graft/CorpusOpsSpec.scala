@@ -1307,4 +1307,40 @@ class CorpusOpsSpec extends SparkSpec {
       assert(jac == inter.toDouble / (ga + gb - inter))
     }
   }
+
+  test("a _temporary-only partition makes no fold-version claim and no stamp claim") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    import graft.ops.TextDedup
+    // a crashed write: the data files of a finished write, moved under
+    // `part/_temporary/0` as a killed task would have left them
+    def crashedCopy(df: org.apache.spark.sql.DataFrame, part: String): Unit = {
+      val done = Files.createTempDirectory("graft_crashed").resolve("t").toString
+      df.write.parquet(done)
+      val staged = Paths.get(part, "_temporary", "0")
+      Files.createDirectories(staged)
+      Files.list(Paths.get(done)).iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet"))
+        .foreach(f => Files.copy(f, staged.resolve(f.getFileName)))
+    }
+    val docs = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
+
+    val ledger = Files.createTempDirectory("graft_ledgertmp").toString
+    val host = concat(lit("site"), (col("doc_id") % 13).cast("string"), lit(".org"))
+    CorpusOps.appendDomainLedgerBatch(docs, host, size(graft.core.Cols.wsTokens(col("text"))),
+      ledger, "b0")
+    val committed = CorpusOps.domainLedger(spark, ledger).collect().toSet
+    crashedCopy(spark.read.parquet(s"$ledger/seg=b0")
+      .withColumn("fold_version", lit("psl-other-version")), s"$ledger/seg=b1")
+    assert(CorpusOps.domainLedger(spark, ledger).collect().toSet == committed,
+      "a crashed segment's other fold version must not count as a claim")
+
+    val idx = Files.createTempDirectory("graft_gramtmp").toString
+    TextDedup.writeGramCountIndex(docs, "text", "doc_id", 8, idx)
+    val other = Files.createTempDirectory("graft_gramother").toString
+    TextDedup.writeGramCountIndex(docs, "text", "doc_id", 5, other)
+    crashedCopy(spark.read.parquet(s"$other/batch=base"), s"$idx/batch=b1")
+    assert(TextDedup.gramCountIndexParams(spark, idx) == ((8, false)),
+      "a crashed partition's other stamp must not count as a claim")
+  }
 }
