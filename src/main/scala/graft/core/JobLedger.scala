@@ -71,4 +71,13 @@ object JobLedger {
   private val Key = "graft.jobLedger"
   private val Fence = "fence"
   private val Counted = "counted"
+
+  /** Runs `body` with every job it starts described as `what`, the
+    * caller's description kept below it; restores the caller's after. */
+  def step[T](spark: SparkSession, what: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val outer = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(Option(outer).fold(what)(o => s"$what\n$o"))
+    try body finally sc.setLocalProperty("spark.job.description", outer)
+  }
 }

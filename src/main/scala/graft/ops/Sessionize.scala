@@ -5,9 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 /** Batch sessionization: split each user's event stream into sessions at
-  * inactivity gaps (the batch twin of Streaming.sessionize, and the op
-  * that produces the reference's precomputed `sessions_30d`-style
-  * columns).
+  * inactivity gaps (the op that produces the reference's precomputed
+  * `sessions_30d`-style columns).
   *
   * Classic gap-and-island: one sort-shuffle on (user, ts); session ids
   * are a running sum over the boundary flags — linear, no self-join.

@@ -173,15 +173,6 @@ object TextDedup {
     transform(sequence(lit(0), lit(k - 1)),
       i => array_min(transform(sh, s => xxhash64(s, i))))
 
-  /** LSH banding: split a k-signature into `bands` bands and hash each;
-    * docs sharing any band hash become candidates.
-    */
-  def bandHashes(sig: Column, bands: Int, rows: Int): Column =
-    array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(concat_ws(",", slice(sig, b * rows + 1, rows)), lit(b)).as("bh"))
-    }: _*)
-
   /** The precomputable half of MinHash dedup: (id, bhs) band-hash
     * signatures. Signature computation is the expensive part (k rehashes
     * of every token of every document); persisting it turns corpus-scale
@@ -278,7 +269,7 @@ object TextDedup {
     */
   def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit =
-    compactBatchedIndex(spark, path)
+    compactBatchedIndexExcept(spark, path, Set.empty)
 
   /** [[compactMinhashIndex]] that carries `keepBatches` through unfolded
     * — see [[compactBatchedIndexExcept]] for why a running stream must
@@ -289,17 +280,11 @@ object TextDedup {
     compactBatchedIndexExcept(spark, path, keepBatches)
 
   /** Shared body of [[compactMinhashIndex]] and
-    * [[graft.ops.VectorSim.compactSignIndex]] — both indexes are flat
-    * signature rows under `path/batch=<key>`.
-    */
-  private[ops] def compactBatchedIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit =
-    compactBatchedIndexExcept(spark, path, Set.empty)
-
-  /** [[compactBatchedIndex]] that folds every batch EXCEPT `keepBatches`,
-    * which are carried into the compacted index unchanged (byte-copied
-    * into the stage — a rename out of the live dir would mutate it
-    * before the swap). This is what makes compaction safe INSIDE a
+    * [[graft.ops.VectorSim.compactSignIndex]] (both indexes are flat
+    * signature rows under `path/batch=<key>`): folds every batch EXCEPT
+    * `keepBatches`, which are carried into the compacted index unchanged
+    * (byte-copied into the stage — a rename out of the live dir would
+    * mutate it before the swap). This is what makes compaction safe INSIDE a
     * running dedup stream: the current micro-batch's own partition may
     * be an uncommitted crashed attempt, and folding it into `base`
     * would make the retry's own-batch exclusion miss those rows —
@@ -360,59 +345,40 @@ object TextDedup {
     * Signature params must match those the index was written with, and
     * index ids must be unique — a duplicated id (retried append) is a
     * corrupted index, and the probe REJECTS it loudly on both the capped
-    * and uncapped paths (one cheap id-only aggregate; map-side combined,
-    * so the shuffle carries ~distinct ids). Without the check the two
-    * paths would emit different pair multiplicities for the same
-    * corrupted index depending on the skew gate. Repair at index-
-    * maintenance time: read, `dropDuplicates("id")`, write to a NEW path
-    * and swap — Spark refuses to overwrite a path it is reading.
+    * and uncapped paths. Repair at index-maintenance time: read,
+    * `dropDuplicates("id")`, write to a NEW path and swap — Spark refuses
+    * to overwrite a path it is reading. The pairs are materialized only
+    * when the probe persisted the index itself (see below); else the
+    * caller's first action runs the probe.
     */
   def incrementalNearDups(newDocs: DataFrame, index: DataFrame,
       textCol: String, idCol: String, shingleLen: Int = 1,
       numHashes: Int = 128, bands: Int = 32,
       maxBucket: Int = 1000, validateIds: Boolean = true): DataFrame = {
+    val spark = newDocs.sparkSession
     // a params-stamped index (writeMinhashIndex) must match the probe's
     // params — a mismatch chains different signature slices and silently
-    // returns near-zero collisions
-    val stamped = index.columns.contains("_bands")
-    if (stamped) {
-      // limit(1): an EMPTY stamped index (first-ever ingest) has nothing
-      // to validate and must yield empty pairs, not a first() crash
-      index.select("_shingle_len", "_num_hashes", "_bands").limit(1)
-        .collect().headOption.foreach { p =>
-          require(p.getInt(0) == shingleLen && p.getInt(1) == numHashes &&
-            p.getInt(2) == bands,
-            s"index was written with (shingleLen=${p.getInt(0)}, " +
-              s"numHashes=${p.getInt(1)}, bands=${p.getInt(2)}), " +
-              s"probe uses ($shingleLen, $numHashes, $bands)")
-        }
-    }
-    val idx = if (stamped) index.drop("_shingle_len", "_num_hashes", "_bands")
-    else index
+    // returns near-zero collisions; the bucket gate below checks it
+    val stamps = if (!index.columns.contains("_bands")) Nil
+      else Seq("_shingle_len" -> shingleLen, "_num_hashes" -> numHashes, "_bands" -> bands)
+    val idx = index.drop(stamps.map(_._1): _*)
     // The gate aggregate below and the candidate join both read the index
     // signatures. A bare table/file scan re-reads cheaply (column-pruned),
     // and so does a caller-cached index (its scan substitutes to an
     // InMemoryRelation, which isBareScan treats as bare); anything with
     // real computation on top (an in-memory minhashSignatures plan) would
     // recompute the expensive signature projection twice, so only THAT
-    // case persists. storageLevel is checked on BOTH frames because the
-    // stamp-drop projection never reflects a cache on the caller's
-    // original (cache lookup matches whole plans).
+    // case persists.
     val ownPersist = index.storageLevel == org.apache.spark.storage.StorageLevel.NONE &&
-      idx.storageLevel == org.apache.spark.storage.StorageLevel.NONE &&
-      !isBareScan(idx.queryExecution.optimizedPlan)
-    if (ownPersist) idx.persist()
-    var capCache: Option[DataFrame] = None
+      !isBareScan(index.queryExecution.optimizedPlan)
+    if (ownPersist) index.persist()
     try {
       // id-uniqueness gate: a duplicated index id would multiply pair
       // rows (uncapped) or corrupt the capped path's counts — fail
-      // loudly instead, identically on both paths. Column-pruned to the
-      // id alone; partial counts combine map-side. Still a full pass over
-      // the index's id column per probe, so callers that structurally
-      // guarantee uniqueness (the streaming loop: each batch overwrites
-      // its OWN batch=<id> partition, so a retry cannot duplicate)
-      // may pass validateIds = false to keep the per-ingest hot path
-      // free of a corpus-sized scan.
+      // loudly instead, identically on both paths. A full pass over the
+      // index's ids, so callers that guarantee uniqueness (the streaming
+      // loop: each batch overwrites its OWN batch=<id> partition) may
+      // pass validateIds = false to keep it off the per-ingest path.
       if (validateIds) {
         val dup = idx.groupBy("id").agg(count(lit(1)).as("_n"))
           .filter(col("_n") > 1).select("id").take(1)
@@ -428,28 +394,46 @@ object TextDedup {
       val bAll = idx.select(col("id").as("id_old"), col("bhs").as("bhs_old"),
         posexplode(col("bhs")).as(Seq("band", "bh")))
 
-      // viral-duplicate guard, same cheap gate + effective-band-array
-      // design as minhashNearDups: only when some index bucket exceeds
+      // viral-duplicate guard, same effective-band-array design as
+      // minhashNearDups: only when a bucket this batch hits exceeds
       // maxBucket do we cap its membership (rank by id) and null the
-      // capped-out bands from each affected old doc's band array — then
-      // the shuffle-free first-collision filter stays EXACT (it matches
-      // only bands where the old doc actually survived), no pairs-keyed
-      // dedup shuffle on either path. The new side is never capped: an
-      // ingest batch is small, and capping it would silently drop incoming
-      // dups. The per-bucket counts are exact member counts (ids are
-      // unique here — the gate above rejects duplicates) and serve double
-      // duty: the global max decides whether to cap, and the over-cap
-      // subset (tiny — only viral clusters) bounds the rank window's
-      // shuffle+sort to the viral rows instead of the whole index×bands
-      // explosion.
-      val counts = bAll.groupBy("band", "bh").agg(count(lit(1)).as("_c"))
-      counts.persist() // read twice (max gate + oversized filter); 1 row/bucket
-      capCache = Some(counts)
-      val maxRow = counts.agg(max(col("_c"))).first()
-      val maxBucketSize = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
-      val b = if (maxBucketSize <= maxBucket) bAll
+      // capped-out bands in each affected old doc's band array, so the
+      // first-collision filter stays EXACT with no pairs-keyed dedup
+      // shuffle. The new side is never capped (it would drop incoming
+      // dups). The gate semi-joins the index's band rows to the batch's
+      // band hashes before the groupBy, so its input grows with the batch,
+      // not the corpus, with the pairs of counting every bucket: a pair
+      // only comes from a bucket the batch hits, and a band it misses never
+      // equals a new doc's, nulled or not. A band hash is seeded with its
+      // band, so `bh` alone names the bucket (a collision only lets an
+      // untouched bucket in) and keeps the broadcast a LongHashedRelation:
+      // a (band, bh) key's relation held ~15 MB more heap. An index row
+      // stamped with other params keys into the sentinel bucket (-1, 0),
+      // which the batch side holds, so the stamp check rides the same job
+      // whatever the row collides with. The one collect returns the
+      // sentinel and the over-cap buckets (the capped path broadcasts them).
+      val stampCols = stamps.map(s => col(s._1))
+      val ok = stamps.map { case (s, v) => col(s) === v }.foldLeft(lit(true))(_ && _)
+      val flagged = graft.core.JobLedger.step(spark, "bucket gate") {
+        index.select(posexplode(col("bhs")).as(Seq("band", "bh")) +: stampCols: _*)
+          .select(Seq(when(ok, col("band")).otherwise(-1).as("band"),
+            when(ok, col("bh")).otherwise(0L).as("bh")) ++ stampCols: _*)
+          .join(a.select("bh").union(spark.range(1).select(lit(0L))), Seq("bh"), "left_semi")
+          .groupBy("band", "bh").agg(count(lit(1)).as("_c"),
+            stampCols.flatMap(c => Seq(min(c), max(c))): _*)
+          .filter(col("band") < 0 || col("_c") > maxBucket).collect()
+      }
+      val mismatch = flagged.find(_.getInt(0) < 0)
+      require(mismatch.isEmpty, {
+        val w = stamps.indices.map(i => Seq(3, 4).map(k => mismatch.get.get(k + 2 * i))
+          .distinct.mkString(".."))
+        s"index was written with (shingleLen=${w(0)}, numHashes=${w(1)}, " +
+          s"bands=${w(2)}), probe uses ($shingleLen, $numHashes, $bands)"
+      })
+      val b = if (flagged.isEmpty) bAll
       else {
-        val oversized = counts.filter(col("_c") > maxBucket).select("band", "bh")
+        val oversized = spark.createDataFrame(
+          flagged.toSeq.map(r => (r.getInt(0), r.getLong(1)))).toDF("band", "bh")
         val wb = org.apache.spark.sql.expressions.Window
           .partitionBy("band", "bh").orderBy("id_old")
         // cappedOut/cappedEff are NOT broadcast-hinted: a mega viral
@@ -481,12 +465,12 @@ object TextDedup {
         .filter(col("id_new") =!= col("id_old"))
         .filter(firstEqualIndex(col("bhs_new"), col("bhs_old")) === col("band"))
         .select("id_new", "id_old")
-      // materialize so the caches can drop HERE (same lifecycle pattern
-      // as minhashNearDups/cosineNearDups)
-      pairs.localCheckpoint(true)
+      // materialize so the index cache can drop HERE (same lifecycle
+      // pattern as minhashNearDups/cosineNearDups)
+      if (ownPersist) graft.core.JobLedger.step(spark, "probe")(pairs.localCheckpoint(true))
+      else pairs
     } finally {
-      if (ownPersist) idx.unpersist(false)
-      capCache.foreach(_.unpersist(false))
+      if (ownPersist) index.unpersist(false)
     }
   }
 
@@ -665,13 +649,11 @@ object TextDedup {
     Components.connectedComponents(docs.select("id"), edges, maxIterations)
   }
 
-  /** 64-bit SimHash from a per-token hash array: bit j of the hash is set
+  /** 64-bit SimHash of the text's token set: bit j of the hash is set
     * when the sum of ±1 contributions (per-token hash bit j) is positive.
     * One codegen'd pass ([[graft.functions.SimHash64]]) — the equivalent
     * `aggregate()` formulation evaluates 64 interpreted lambdas per token.
     */
-  def simhashFromHashes(hashes: Column): Column = simhash64(hashes)
-
   def simhash(text: Column): Column = simhash64(hashedTokenSet(text))
 
   /** SimHash near-dup pairs: candidates share one of four 16-bit chunks

@@ -1282,7 +1282,7 @@ object VectorSim {
     */
   def compactSignIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit =
-    graft.ops.TextDedup.compactBatchedIndex(spark, path)
+    graft.ops.TextDedup.compactBatchedIndexExcept(spark, path, Set.empty)
 
   /** [[compactSignIndex]] that carries `keepBatches` through unfolded —
     * see [[graft.ops.TextDedup.compactBatchedIndexExcept]] for why a

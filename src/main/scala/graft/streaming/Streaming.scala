@@ -1,12 +1,12 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftShim, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
-import graft.core.{ChurnSchema, ParquetDir}
+import graft.core.{ChurnSchema, JobLedger, ParquetDir}
 
 /** Structured Streaming extension (SURVEY §2.11 / §7 step 9): the
   * reference is batch-only with a daily Airflow cadence; its own docs
@@ -209,9 +209,9 @@ object Streaming {
     * batch by batch — what [[indexStream]] needs to run the shared gates:
     *  - `live`: the index dir a staged swap replaces, and `stageSuffix`
     *    its stage sibling (`_compacting` or `_merging`);
-    *  - `siblings`: the dirs the loop commits BEFORE its index append
-    *    (pairs, spans, ledger deltas, postings, clean rows) — the
-    *    data-loss check of [[committedPrior]];
+    *  - `siblings`: the dirs the loop commits before (or, MinHash pairs,
+    *    alongside) its index append (pairs, spans, ledger deltas,
+    *    postings, clean rows) — the data-loss check of [[committedPrior]];
     *  - `partCol`: the incarnation-keyed partition column (`batch` or
     *    `seg`);
     *  - `flatIndex`: the rejection for a dir without `partCol`
@@ -248,13 +248,16 @@ object Streaming {
     * ledger deltas, re-admitted duplicates), so that case fails loudly.
     *
     * Sibling entries named `<col>=<own>` are IGNORED when classifying a
-    * sibling as populated: every loop commits sibling output BEFORE the
-    * index append, so the routine batch-0 crash — killed between the
-    * sibling commit and the index append — leaves exactly one sibling
-    * partition, this batch's own, next to an uncommitted index. That is
-    * the bootstrap-retry state, not data loss: the retry overwrites that
-    * very partition anyway. Only sibling entries from OTHER batches
-    * prove the index once held data.
+    * sibling as populated: every loop commits sibling output before its
+    * index append (the MinHash loop alongside it), so the routine batch-0
+    * crash — killed between the sibling commit and the index append's —
+    * leaves exactly one sibling partition, this batch's own, next to an
+    * uncommitted index. That is the bootstrap-retry state, not data
+    * loss: the retry overwrites that very partition anyway. Only sibling
+    * entries from OTHER batches prove the index once held data. (A
+    * MinHash batch-0 crash can also leave the append committed and the
+    * pairs not: the own-batch exclusion below reads that index as an
+    * empty prior.)
     *
     * The own-batch exclusion keeps a retry that crashed between its
     * append and the streaming commit from seeing its own rows as prior
@@ -305,46 +308,70 @@ object Streaming {
     *     loop's own persist choice — unpersisted after the body;
     *  5. the re-delivery gate, when the kind has one, fails the batch on
     *     an id already in the prior index (retries of THIS batch are
-    *     excluded, so they don't false-positive): one column-pruned scan
-    *     + semi-join, with no broadcast hint — an AvailableNow backlog
-    *     batch can be millions of rows, so AQE picks the join strategy;
-    *  6. `body(rows, prior, own)` probes and writes, siblings first.
+    *     excluded, so they don't false-positive): a semi-join with no
+    *     broadcast hint (an AvailableNow backlog batch can be millions of
+    *     rows, so AQE picks the join strategy) that returns at most one
+    *     id per partition in one job, where `take(1)` rescans in waves.
+    *     It runs on its own thread while `body(rows, prior, own)` reads:
+    *     the body probes (its own gates included) and returns its writes;
+    *  6. the writes run once the gate has passed, siblings first (the
+    *     MinHash loop writes its pairs alongside its append).
+    * Each step names its jobs ([[graft.core.JobLedger.step]]).
     */
   private def indexStream(input: DataFrame, checkpoint: String,
       ix: IndexKind, rowsOf: DataFrame => DataFrame = identity)(
-      body: (DataFrame, Option[DataFrame], String) => Unit): StreamingQuery =
+      body: (DataFrame, Option[DataFrame], String) => () => Unit): StreamingQuery =
     microBatch(input, checkpoint, Some((ix.live, ix.stageSuffix))) {
         (batch, batchId, own) =>
       val sp = batch.sparkSession
-      val prior = committedPrior(sp, ix.dir, ix, own) match {
+      def prior(dir: String) =
+        JobLedger.step(sp, "prior read")(committedPrior(sp, dir, ix, own))
+      val index = prior(ix.dir) match {
         case Some(_) if compactionDue(ix.compactEvery, batchId) =>
-          ix.compactExcept(sp, Set(own))
-          committedPrior(sp, ix.dir, ix, own)
+          JobLedger.step(sp, "compaction")(ix.compactExcept(sp, Set(own)))
+          prior(ix.dir)
         case p => p
       }
       val rows = rowsOf(batch)
+      def redeliveryGate(): Unit = ix.redelivery match {
+        case RejectRedelivered(batchIdCol, indexIdCol, idsDir) =>
+          val ids = idsDir.fold(index)(d => index.flatMap(_ => prior(d)))
+          ids.foreach { idx =>
+            val hits = idx.select(col(indexIdCol).as("id"))
+              .join(rows.select(col(batchIdCol).as("id")), Seq("id"), "left_semi")
+            val redelivered = JobLedger.step(sp, "re-delivery gate")(
+              hits.mapPartitions(_.take(1))(Encoders.row(hits.schema)).collect())
+            require(redelivered.isEmpty,
+              s"id ${redelivered.headOption.map(_.get(0)).orNull} was " +
+                "already ingested by an earlier batch and is already " +
+                s"indexed in ${idsDir.getOrElse(ix.dir)}; dedup upstream " +
+                "(dedupDocStream) or repair the index before appending")
+          }
+        case AdmitRedelivered(_) =>
+      }
       try {
-        ix.redelivery match {
-          case RejectRedelivered(batchIdCol, indexIdCol, idsDir) =>
-            val ids = idsDir.fold(prior)(d =>
-              prior.flatMap(_ => committedPrior(sp, d, ix, own)))
-            ids.foreach { idx =>
-              val redelivered = idx.select(col(indexIdCol).as("id")).join(
-                rows.select(col(batchIdCol).as("id")).distinct(), "id").take(1)
-              require(redelivered.isEmpty,
-                s"id ${redelivered.headOption.map(_.get(0)).orNull} was " +
-                  "already ingested by an earlier batch and is already " +
-                  s"indexed in ${idsDir.getOrElse(ix.dir)}; dedup upstream " +
-                  "(dedupDocStream) or repair the index before appending")
-            }
-          case AdmitRedelivered(_) =>
-        }
-        body(rows, prior, own)
+        val writes = alongside(redeliveryGate())(body(rows, index, own))
+        writes()
       } finally {
         if (rows.storageLevel != StorageLevel.NONE) rows.unpersist(false)
         ()
       }
     }
+
+  /** Runs `side` on a new thread, which inherits this thread's Spark
+    * local properties (job group, description, ledger tag), while `main`
+    * runs here; returns `main`'s result once both ended, `side`'s failure
+    * first. */
+  private def alongside[A](side: => Unit)(main: => A): A = {
+    @volatile var failed: Throwable = null
+    val t = new Thread(() => try side catch { case e: Throwable => failed = e })
+    t.setDaemon(true)
+    t.start()
+    val out = scala.util.Try(main)
+    t.join()
+    if (failed != null) throw failed
+    out.get
+  }
 
   /** Streaming incremental NEAR-dup detection — the production ingest
     * loop the persisted MinHash index exists for. Every micro-batch:
@@ -376,18 +403,24 @@ object Streaming {
         "index with compactMinhashIndex",
       RejectRedelivered(idCol), compactEvery,
       graft.ops.TextDedup.compactMinhashIndexExcept(_, indexDir, _))
-    // read twice: probe + signature append
-    indexStream(docs, checkpoint, ix, _.persist()) { (cached, prior, own) =>
+    // persists nothing: under AQE a cache costs a job of its own, more
+    // than each step re-reading the batch's files
+    indexStream(docs, checkpoint, ix) { (batch, prior, own) =>
       val pairs = prior match {
-        case Some(idx) => graft.ops.TextDedup.incrementalNearDups(cached, idx,
+        case Some(idx) => graft.ops.TextDedup.incrementalNearDups(batch, idx,
           textCol, idCol, shingleLen, numHashes, bands, maxBucket,
           validateIds = false)
         case None => // first-ever ingest: nothing to collide with, typed empty
-          cached.select(col(idCol).as("id_new"), col(idCol).as("id_old")).limit(0)
+          batch.select(col(idCol).as("id_new"), col(idCol).as("id_old")).limit(0)
       }
-      pairs.write.mode("overwrite").parquet(s"$pairsDir/batch=$own")
-      graft.ops.TextDedup.appendMinhashIndexBatchKeyed(cached, textCol, idCol,
-        indexDir, own, shingleLen, numHashes, bands)
+      // incrementalNearDups ran the bucket gate and returns the probe's
+      // plan: the pairs write runs it, alongside the index append (the
+      // probe's prior excludes this batch's own partition)
+      () => alongside(JobLedger.step(batch.sparkSession, "index append")(
+          graft.ops.TextDedup.appendMinhashIndexBatchKeyed(batch, textCol,
+            idCol, indexDir, own, shingleLen, numHashes, bands)))(
+        JobLedger.step(batch.sparkSession, "probe + sibling write")(
+          pairs.write.mode("overwrite").parquet(s"$pairsDir/batch=$own")))
     }
   }
 
@@ -414,7 +447,7 @@ object Streaming {
       RejectRedelivered(idCol), compactEvery,
       graft.ops.VectorSim.compactSignIndexExcept(_, indexDir, _))
     // read twice: probe + signature append
-    indexStream(vecs, checkpoint, ix, _.persist()) { (cached, prior, own) =>
+    indexStream(vecs, checkpoint, ix, _.persist()) { (cached, prior, own) => () =>
       val pairs = prior match {
         case Some(idx) => graft.ops.VectorSim.incrementalCosineNearDups(cached,
           idx, idCol, vecCol, threshold, numTables, planesPerTable, dim, seed,
@@ -454,7 +487,7 @@ object Streaming {
     // decode once, read twice (probe + append)
     indexStream(images, checkpoint, ix,
         graft.ops.ImageHash.pngHashes(_, idCol, pngCol).persist()) {
-        (hashes, prior, own) =>
+        (hashes, prior, own) => () =>
       val pairs = prior match {
         case Some(idx) =>
           graft.ops.ImageHash.phashMatches(hashes, idx, idCol, "dhash", maxHamming)
@@ -542,7 +575,7 @@ object Streaming {
         blockSize, _),
       subdir = "/norms")
     // read thrice: gate + postings + norms
-    indexStream(docs, checkpoint, ix, _.persist()) { (cached, _, own) =>
+    indexStream(docs, checkpoint, ix, _.persist()) { (cached, _, own) => () =>
       graft.ops.TextRank.appendSearchIndexBatch(cached, textCol, idCol,
         indexDir, own, blockSize)
       // optional phrase-serving component: same segment key, same
@@ -625,7 +658,7 @@ object Streaming {
       RejectRedelivered(idCol, idsDir = Some(s"$indexDir/_ids")), compactEvery,
       graft.ops.TextDedup.compactGramCountIndexExcept(_, indexDir, _))
     // read thrice: probe + ids gate + count append
-    indexStream(docs, checkpoint, ix, _.persist()) { (cached, prior, own) =>
+    indexStream(docs, checkpoint, ix, _.persist()) { (cached, prior, own) => () =>
       val spans =
         if (prior.isDefined) graft.ops.TextDedup.incrementalExactSubstringSpans(
           cached, textCol, idCol, indexDir, excludeBatch = Some(own))
@@ -731,7 +764,7 @@ object Streaming {
       AdmitRedelivered("re-delivered (source, gram) pairs anti-join " +
         "against the index and add a zero delta: that is the ledger's " +
         "semantics, not a corruption"))
-    indexStream(docs, checkpoint, ix) { (batch, prior, own) =>
+    indexStream(docs, checkpoint, ix) { (batch, prior, own) => () =>
       val index = prior.map(_.select("source", "gram")).getOrElse(
         // first-ever ingest (or its crashed retry): typed empty
         graft.ops.CorpusOps.sourceGrams(batch, sourceCol, textCol, n).limit(0))
@@ -798,7 +831,7 @@ object Streaming {
       graft.ops.TextDedup.compactMinhashIndexExcept(_, indexDir, _))
     // persists nothing: the batch is read once, the clean rows re-read
     // from their committed partition
-    indexStream(docs, checkpoint, ix) { (batch, prior, own) =>
+    indexStream(docs, checkpoint, ix) { (batch, prior, own) => () =>
       val sp = batch.sparkSession
       val survivors = prior match {
         case Some(priorFps) =>
@@ -818,7 +851,7 @@ object Streaming {
       survivors.write.mode("overwrite").parquet(s"$cleanDir/batch=$own")
       // fingerprints of the JUST-WRITTEN clean partition: the index can
       // never disagree with the clean output it guards
-      val clean = sp.read.parquet(s"$cleanDir/batch=$own")
+      val clean = ParquetDir.committed(sp, s"$cleanDir/batch=$own").get
       clean
         .select(graft.ops.TextDedup.fingerprint(col(textCol)).as("fp"),
           col(idCol).as("id"))
@@ -1075,40 +1108,9 @@ object Streaming {
         ledgerDir, own)
     }
 
-  // ---- stateful sessionization -------------------------------------------
+  // ---- the event row the windowed-event streams read --------------------
 
   final case class Event(user_id: Long, ts: java.sql.Timestamp, event_type: String, value: Double)
-  final case class SessionState(count: Long, sumValue: Double, lastTs: Long)
-  final case class SessionUpdate(user_id: Long, events: Long, sum_value: Double, closed: Boolean)
-
-  /** Per-user running session: accumulates events, emits a closed session
-    * after `gapMillis` of inactivity (processing-time timeout). The
-    * KeyValueGroupedDataset state machine is the engine-level primitive
-    * the reference's "session_30d"-style precomputed columns come from.
-    */
-  def sessionize(events: Dataset[Event], gapMillis: Long = 30 * 60 * 1000L): Dataset[SessionUpdate] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, SessionUpdate](
-        OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout()) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(SessionUpdate(userId, s.count, s.sumValue, closed = true))
-          } else {
-            val evs = rows.toSeq
-            val prev = state.getOption.getOrElse(SessionState(0L, 0.0, 0L))
-            val next = SessionState(
-              prev.count + evs.size,
-              prev.sumValue + evs.map(_.value).sum,
-              math.max(prev.lastTs, evs.map(_.ts.getTime).max))
-            state.update(next)
-            state.setTimeoutDuration(gapMillis)
-            Iterator(SessionUpdate(userId, next.count, next.sumValue, closed = false))
-          }
-      }
-  }
 
   // ---- streaming CUSUM drift monitor -------------------------------------
 
